@@ -11,6 +11,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * per log line. `Dataset.observe` is the scale-correct analogue: named
   * count metrics ride along with whatever action already runs and are
   * delivered to a listener — zero additional passes over the data.
+  *
+  * A count covers every pass over the observed frame within one action.
+  * A range-partitioned sort (`orderBy`) over an uncached observed frame
+  * runs a sampling job over it first, so its rows are counted once more.
+  * Observe frames that are cached or not sorted downstream.
   */
 object EtlMetrics {
 

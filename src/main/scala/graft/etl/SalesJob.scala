@@ -11,17 +11,20 @@ import graft.sources.SalesSource
   * transforms (Q1/Q2/Q3) → date formatting (Q4) → golden CSV export (K1)
   * and optional JDBC load (K2).
   *
-  * Lifecycle mirrors SURVEY §3.1: the raw frame feeds BOTH the valid and
-  * invalid branches and the valid frame feeds both the summary and its own
-  * sinks, so both are cached (the lazy-DAG analogue of pandas'
-  * materialization). Output row order reproduces pandas: ingestion order
-  * for valid, N→A→D block order then ingestion order for invalid,
-  * group-key order for the summary.
+  * Lifecycle mirrors SURVEY §3.1 (the lazy-DAG analogue of pandas'
+  * materialization): [[run]] caches every frame that is read more than
+  * once — `raw` (feeds the valid and invalid branches), `valid` (feeds
+  * the summary and its own sinks), `invalid` (read by every sink and by
+  * the sampling pass of its sorted write) and `summary` (read by every
+  * sink). Each is computed once, so each observed row count is counted
+  * once. Output row order reproduces pandas: ingestion order for valid,
+  * N→A→D block order then ingestion order for invalid, group-key order
+  * for the summary.
   */
 object SalesJob {
 
-  /** `raw` is the cached source frame both branches read — carried so
-    * [[unpersist]] can free everything [[run]] cached.
+  /** Every frame here is cached by [[run]]; `raw` is the source frame both
+    * branches read — carried so [[unpersist]] can free it too.
     */
   final case class Outputs(valid: DataFrame, invalid: DataFrame,
       summary: DataFrame, raw: DataFrame) {
@@ -30,10 +33,8 @@ object SalesJob {
       * a job must not leak storage into a long-lived session that runs
       * many jobs (the same rule library operators follow).
       */
-    def unpersist(): Unit = {
-      valid.unpersist()
-      raw.unpersist()
-    }
+    def unpersist(): Unit =
+      Seq(valid, invalid, summary, raw).foreach(_.unpersist())
   }
 
   private val ingestOrder = Seq(col("_ingest_file"), col("_ingest_id"))
@@ -54,10 +55,12 @@ object SalesJob {
         extraCols = Seq("_ingest_file", "_ingest_id")), "sales_valid")
       .cache()
     val invalid = EtlMetrics.observed(SalesEtl.detectInvalidSales(raw), "sales_invalid")
+      .cache()
     val summary = EtlMetrics.observed(
       SalesEtl.monthlySummary(
         valid.select("Sale_ID", "Product", "Amount", "Date", "Audit_Date")),
       "sales_summary")
+      .cache()
     Outputs(valid, invalid, summary, raw)
   }
 

@@ -35,23 +35,36 @@ object Sinks {
       .option("ignoreTrailingWhiteSpace", "false")
 
   /** K1: single CSV file at `target` with UTF-8 BOM, matching
-    * `to_csv(index=False, encoding='utf-8-sig')`.
+    * `to_csv(index=False, encoding='utf-8-sig')`. The part file is streamed
+    * behind the BOM into a hidden sibling of `target`, which is then moved
+    * over `target`: a failed export leaves no truncated file.
     */
   def writeCsvGolden(df: DataFrame, target: String): Unit = {
-    val tmp = Files.createTempDirectory("graft-csv-").toString + "/out"
-    csvWriter(df.coalesce(1)).mode(SaveMode.Overwrite).csv(tmp)
-    val listing = Files.list(Paths.get(tmp))
-    val part =
-      try listing.toArray.map(_.asInstanceOf[Path])
-        .find(_.getFileName.toString.startsWith("part-"))
-        .getOrElse(sys.error(s"no part file written under $tmp"))
-      finally listing.close()
-    val out = Paths.get(target)
-    if (out.getParent != null) Files.createDirectories(out.getParent)
-    val bytes = Files.readAllBytes(part)
-    Files.write(out, Bom ++ bytes)
-    Files.walk(Paths.get(tmp).getParent).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.deleteIfExists(p))
+    val tmpDir = Files.createTempDirectory("graft-csv-")
+    try {
+      val tmp = tmpDir.resolve("out")
+      csvWriter(df.coalesce(1)).mode(SaveMode.Overwrite).csv(tmp.toString)
+      val listing = Files.list(tmp)
+      val part =
+        try listing.toArray.map(_.asInstanceOf[Path])
+          .find(_.getFileName.toString.startsWith("part-"))
+          .getOrElse(sys.error(s"no part file written under $tmp"))
+        finally listing.close()
+      val out = Paths.get(target).toAbsolutePath
+      Files.createDirectories(out.getParent)
+      // not Files.createTempFile: its owner-only mode would reach `target`
+      val staged = out.resolveSibling(s".${out.getFileName}.tmp")
+      try {
+        val os = Files.newOutputStream(staged)
+        try { os.write(Bom); Files.copy(part, os) } finally os.close()
+        Files.move(staged, out,
+          StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+      } finally Files.deleteIfExists(staged)
+    } finally {
+      val walk = Files.walk(tmpDir)
+      try walk.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.deleteIfExists(p))
+      finally walk.close()
+    }
   }
 
   /** K1 at scale: same CSV options, one file per partition, no driver

@@ -17,10 +17,10 @@ import org.apache.spark.sql.types._
   *
   * Scale note: the reference loads files one-by-one on a single thread and
   * concatenates in memory. Here the whole directory is a single distributed
-  * scan — Spark splits large files, schedules one task per split, and the
-  * filename-derived column is a per-partition constant (no shuffle). At
-  * 100 TB this is embarrassingly parallel; `Audit_Date` derivation adds no
-  * exchange.
+  * scan and the filename-derived column is a per-partition constant (no
+  * shuffle). Small files are packed together: with Spark's 4 MB file open
+  * cost and 128 MB split size, about 30 small CSVs share one partition,
+  * while a file larger than a split is cut into several.
   */
 object SalesSource {
 
@@ -39,50 +39,54 @@ object SalesSource {
   private def fileStem: org.apache.spark.sql.Column =
     regexp_extract(input_file_name(), "([^/]+)\\.csv$", 1)
 
-  /** S1: read every `*.csv` under `dir`, adding:
+  /** S1: read every `*.csv` directly under `dir`, adding:
     *  - `Audit_Date`: timestamp parsed from the filename stem (null when
     *    the stem is not `yyyy-MM-dd` — `errors='coerce'`),
     *  - `_ingest_file`, `_ingest_id`: ingestion-order key used by
     *    keep-first dedup (M1). pandas keep-first depends on file
     *    enumeration order then row order; we order by (file name, id
     *    within scan). `monotonically_increasing_id` is ordered within a
-    *    partition, and each small CSV is one partition; for files larger
-    *    than one split the within-file order is only per-split — callers
-    *    needing a total order at scale should carry an explicit sequence
-    *    column in the data instead.
+    *    partition, and a file smaller than one split is read whole by one
+    *    partition; for files larger than one split the within-file order
+    *    is only per-split — callers needing a total order at scale should
+    *    carry an explicit sequence column in the data instead.
+    *
+    * One driver-side listing of `dir` picks the read:
+    *  - no `*.csv` file, or no directory: an empty frame, as the
+    *    reference returns for an empty feed (`etl_utils.py:200-202`),
+    *    where Spark fails an absent directory with PATH_NOT_FOUND;
+    *  - plain files only: `dir` itself is the scan's single root, with a
+    *    `*.csv` path filter. Spark lists one root on the driver and
+    *    launches no listing job;
+    *  - any subdirectory: the top-level `*.csv` files are passed as an
+    *    explicit list. A directory root would run partition discovery on
+    *    the subdirectories, unlike the reference's flat `os.listdir`
+    *    (`etl_utils.py:166-206`): with a `region=eu/` subdirectory, Spark
+    *    4.1 reads only the nested files and appends a `region` column.
+    *    Past 32 paths (`spark.sql.sources.parallelPartitionDiscovery.threshold`)
+    *    Spark stats an explicit list in a Spark job with one task per file.
+    *
+    * Either way Spark's file index skips `_`- and `.`-prefixed files, which
+    * the reference's `os.listdir` would read.
     */
   def readSalesDirectory(
       spark: SparkSession,
       dir: String,
       schema: StructType = salesRawSchema): DataFrame = {
-    // Reference fidelity (etl_utils.py:200-202): an empty/absent input
-    // directory yields an EMPTY frame, not an error — Spark's glob read
-    // would throw PATH_NOT_FOUND instead. The listing is a cheap
-    // driver-side stat, not a data read.
-    //
-    // The TOP-LEVEL file list is passed explicitly (not a dir +
-    // pathGlobFilter, which recurses into subdirectories and runs
-    // partition discovery — a key=value subdir would append an unexpected
-    // partition column to the fixed schema and nested CSVs would be
-    // ingested, deviating from the reference's flat os.listdir semantics
-    // at etl_utils.py:166-206). At cluster scale the driver-side listing
-    // of one directory is O(files) metadata, not a data scan.
-    val csvFiles = {
-      val files = new java.io.File(dir).listFiles()
-      if (files == null) Array.empty[String]
-      else files.filter(f => f.isFile && f.getName.endsWith(".csv"))
-        .map(_.getPath).sorted
-    }
+    val entries = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+    val csvFiles = entries.filter(f => f.isFile && f.getName.endsWith(".csv"))
+    val reader = spark.read
+      .schema(schema)
+      .option("header", "true")
+      .option("mode", "PERMISSIVE")
     val raw =
-      if (csvFiles.nonEmpty)
-        spark.read
-          .schema(schema)
-          .option("header", "true")
-          .option("mode", "PERMISSIVE")
-          .csv(csvFiles: _*)
-      else
+      if (csvFiles.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      else if (entries.exists(_.isDirectory))
+        reader.csv(csvFiles.map(_.getPath).sorted.toIndexedSeq: _*)
+      else
+        reader.option("pathGlobFilter", "*.csv").csv(dir)
     raw
       .withColumn("Audit_Date", try_to_timestamp(fileStem, lit("yyyy-MM-dd")))
       .withColumn("_ingest_file", input_file_name())

@@ -108,6 +108,59 @@ class SalesJobSpec extends SparkSpec {
     assert(sids === Seq("a1"), "nested CSV must not be ingested")
   }
 
+  private def writeSales(dir: java.nio.file.Path, name: String, sid: String): Unit =
+    Files.write(dir.resolve(name),
+      s"Sale_ID,Product,Amount,Date\n$sid,cat-a,1.00 USD,2025-01-02\n"
+        .getBytes(StandardCharsets.UTF_8))
+
+  /** Rows of `df` as sorted strings, over the four raw columns. */
+  private def rawRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select("Sale_ID", "Product", "Amount", "Date").collect().map(_.mkString(",")).toSeq.sorted
+
+  /** The explicit-file read of every top-level `*.csv` in `dir`. */
+  private def explicitRead(dir: java.nio.file.Path): org.apache.spark.sql.DataFrame = {
+    val files = dir.toFile.listFiles().filter(f => f.isFile && f.getName.endsWith(".csv"))
+      .map(_.getPath).sorted
+    spark.read.schema(graft.sources.SalesSource.salesRawSchema)
+      .option("header", "true").csv(files.toIndexedSeq: _*)
+  }
+
+  test("S1: a flat directory above the parallel-listing threshold launches no Spark job") {
+    val dir = Files.createTempDirectory("graft-flat40-")
+    (1 to 40).foreach(i =>
+      writeSales(dir, s"${java.time.LocalDate.of(2025, 1, 1).plusDays(i)}.csv", s"f$i"))
+    val sc = spark.sparkContext
+    val group = s"s1-listing-${System.nanoTime}"
+    sc.setJobGroup(group, "S1 directory listing")
+    val df = try graft.sources.SalesSource.readSalesDirectory(spark, dir.toString)
+      finally sc.clearJobGroup()
+    // the status store is fed by the listener bus: once a later marker
+    // job shows up, any job the read launched would have shown up too
+    val marker = s"$group-marker"
+    sc.setJobGroup(marker, "listener-bus marker")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.currentTimeMillis() + 10000
+    while (System.currentTimeMillis() < deadline &&
+      sc.statusTracker.getJobIdsForGroup(marker).isEmpty) Thread.sleep(20)
+    assert(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty)
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty,
+      "listing a flat feed directory must not launch a Spark job")
+    val rows = rawRows(df)
+    assert(rows.size === 40)
+    assert(rows === rawRows(explicitRead(dir)))
+  }
+
+  test("S1: non-CSV, `_`- and `.`-prefixed entries are skipped as by the explicit-file read") {
+    val dir = Files.createTempDirectory("graft-mixed-")
+    writeSales(dir, "2025-01-01.csv", "a1")
+    writeSales(dir, "notes.txt", "t1")
+    writeSales(dir, "_x.csv", "u1")
+    writeSales(dir, ".x.csv", "d1")
+    val df = graft.sources.SalesSource.readSalesDirectory(spark, dir.toString)
+    assert(df.select("Sale_ID").collect().map(_.getString(0)).toSeq === Seq("a1"))
+    assert(rawRows(df) === rawRows(explicitRead(dir)))
+  }
+
   test("S1: binary-garbage .csv degrades to coerced-null rows, never a failed job") {
     // The reference skips an entirely unreadable file per-file
     // (etl_utils.py:193-194: log + continue). Spark's PERMISSIVE CSV read

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.LocalFinish
 
 /** Latent-factor recommendation by alternating least squares (X298;
   * Koren/Bell/Volinsky IEEE Computer 2009; the ALS schedule of Zhou et
@@ -48,7 +49,7 @@ object AlsOps {
       ratingCol: String, rounds: Int = 2, lambdaMilli2: Long = 100000L,
       topUsers: Int = 20,
       materialize: DataFrame => DataFrame = _.localCheckpoint(eager = true),
-      localFinishCap: Long = 1000000L)
+      localFinishCap: Long = LocalFinish.Ratings)
       : DataFrame = {
     require(rounds >= 1, s"rounds ($rounds) must be >= 1")
     val r = materialize(ratings.select(col(userCol).as("u"),
@@ -65,10 +66,8 @@ object AlsOps {
     // same toward-zero adjugate divisions, same tie-breaks. Above the
     // cap the distributed alternations run unchanged (the 100 TB
     // path); AlsOpsSpec pins local == distributed on a real feed.
-    if (localFinishCap > 0 &&
-        r.schema("u").dataType == org.apache.spark.sql.types.LongType &&
-        r.schema("i").dataType == org.apache.spark.sql.types.LongType &&
-        r.count() <= localFinishCap)
+    if (LocalFinish.fits("AlsOps.alsFactors", localFinishCap,
+        LocalFinish.longIds(r, "u", "i"))(r.count()))
       return localAls(r, userCol, rounds, lambdaMilli2, topUsers)
     def h(prefix: String, c: Column, f: Int): Column =
       expr(s"cast(conv(substring(md5(concat('$prefix', " +
@@ -134,14 +133,10 @@ object AlsOps {
     import org.apache.spark.sql.types._
     val spark = r.sparkSession
     import spark.implicits._
-    // coalesce(1), NOT repartition(1): the input is already a
-    // checkpointed leaf, so coalescing concatenates its partitions in
-    // one task without the round-robin shuffle's sort-before-
-    // repartition pass (measured 1.7 s on 590k rows); every
-    // accumulation below is order-insensitive, so partition order is
-    // irrelevant. The typed path decodes straight to primitive tuples.
-    // null ids fail loudly at encoder decode (the CC-precedent local
-    // contract: callers feed non-null keys — the query site filters)
+    // the one-task idiom and its measured reason: see LocalFinish. The
+    // typed path decodes straight to primitive tuples; null ids fail
+    // loudly at decode (callers feed non-null keys — the query site
+    // filters)
     val out = r.as[(Long, Long, Long)].coalesce(1).mapPartitions { it =>
       import scala.collection.mutable
       val us = mutable.ArrayBuffer.empty[Long]

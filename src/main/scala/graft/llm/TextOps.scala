@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.LocalFinish
 
 /** Text-pipeline operators for LLM training-data curation: exact / near
   * deduplication, document fingerprinting, SimHash, and per-document text
@@ -1925,7 +1926,7 @@ object TextOps {
   def trainLinearClassifier(df: DataFrame, idCol: String, textCol: String,
       label: Column, numBuckets: Int, salt: String, rounds: Int,
       lrDiv: Long, clipMilli: Long, topW: Int,
-      localFinishCap: Long = 2000000L): DataFrame = {
+      localFinishCap: Long = LocalFinish.FeatureRows): DataFrame = {
     require(rounds >= 1 && numBuckets > 0 && lrDiv > 0 && clipMilli > 0 && topW > 0,
       s"bad hyperparameters: rounds=$rounds buckets=$numBuckets lrDiv=$lrDiv " +
         s"clip=$clipMilli topW=$topW")
@@ -1949,9 +1950,8 @@ object TextOps {
     // (same Long sums, same floor-of-double divisions, same clamps and
     // tie-breaks); the distributed rounds run unchanged above it.
     // CartographySpec/local==distributed tests pin equality.
-    if (localFinishCap > 0 &&
-        feats.schema("doc").dataType == org.apache.spark.sql.types.LongType &&
-        feats.count() <= localFinishCap)
+    if (LocalFinish.fits("TextOps.trainLinearClassifier", localFinishCap,
+        LocalFinish.longIds(feats, "doc"))(feats.count()))
       return localTrainClassifier(feats, labels, n0, n1, numBuckets,
         rounds, lrDiv, clipMilli, topW)
     var w = spark.range(numBuckets)
@@ -2029,7 +2029,7 @@ object TextOps {
   def trainingCartography(df: DataFrame, idCol: String, textCol: String,
       label: Column, numBuckets: Int, salt: String, rounds: Int,
       lrDiv: Long, clipMilli: Long,
-      localFinishCap: Long = 2000000L): DataFrame = {
+      localFinishCap: Long = LocalFinish.FeatureRows): DataFrame = {
     require(rounds >= 1 && numBuckets > 0 && lrDiv > 0 && clipMilli > 0,
       s"bad hyperparameters: rounds=$rounds buckets=$numBuckets lrDiv=$lrDiv"
         + s" clip=$clipMilli")
@@ -2047,9 +2047,8 @@ object TextOps {
     // LOCAL FINISH (r16) — see [[trainLinearClassifier]]'s gate; the
     // same one-task replay keeps each round's per-doc |e| instead of
     // the curve scalar.
-    if (localFinishCap > 0 &&
-        feats.schema("doc").dataType == org.apache.spark.sql.types.LongType &&
-        feats.count() <= localFinishCap)
+    if (LocalFinish.fits("TextOps.trainingCartography", localFinishCap,
+        LocalFinish.longIds(feats, "doc"))(feats.count()))
       return localCartography(feats, labels, n0, n1, numBuckets,
         rounds, lrDiv, clipMilli)
     var w = spark.range(numBuckets)

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.LocalFinish
 
 /** Topic modeling over the documents table (X293; pLSA — Hofmann
   * SIGIR'99, the EM ancestor of LDA) — the corpus-structure family the
@@ -60,7 +61,7 @@ object TopicOps {
   def plsaTopics(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 4, rounds: Int = 3, topWords: Int = 8,
       materialize: DataFrame => DataFrame = _.localCheckpoint(eager = true),
-      localFinishCap: Long = 2000000L)
+      localFinishCap: Long = LocalFinish.FeatureRows)
       : DataFrame = {
     require(k >= 2, s"k ($k) must be >= 2")
     require(rounds >= 1, s"rounds ($rounds) must be >= 1")
@@ -90,13 +91,13 @@ object TopicOps {
     // (p desc, word) tie-breaks under UTF-8-byte string order. Above
     // the cap the distributed rounds run unchanged (the 100 TB path).
     // The token bound keeps every local sum provably inside Long
-    // (see localEm); TopicModelSpec pins local == distributed.
-    if (localFinishCap > 0 &&
-        n.schema("d").dataType == org.apache.spark.sql.types.LongType) {
-      val r0 = n.agg(count(lit(1)), coalesce(sum("n"), lit(0L))).head()
-      if (r0.getLong(0) <= localFinishCap && r0.getLong(1) <= MaxLocalTokens)
-        return localPlsa(n, k, rounds, topWords)
-    }
+    // (see localEm); TopicModelSpec pins local == distributed. One job
+    // counts rows and tokens, and only when the gate asks for it.
+    lazy val r0 = n.agg(count(lit(1)), coalesce(sum("n"), lit(0L))).head()
+    if (LocalFinish.fits("TopicOps.plsaTopics", localFinishCap,
+          LocalFinish.longIds(n, "d"))(r0.getLong(0)) &&
+        r0.getLong(1) <= MaxLocalTokens)
+      return localPlsa(n, k, rounds, topWords)
     val zs = broadcast((0 until k).toDF("z"))
     def hmod(prefix: String, a: Column, b: Column): Column =
       expr(s"cast(conv(substring(md5(concat('$prefix', " +
@@ -186,7 +187,7 @@ object TopicOps {
       textCol: String, k: Int = 4, trainRounds: Int = 3,
       foldRounds: Int = 2,
       materialize: DataFrame => DataFrame = _.localCheckpoint(eager = true),
-      localFinishCap: Long = 2000000L)
+      localFinishCap: Long = LocalFinish.FeatureRows)
       : DataFrame = {
     require(k >= 2, s"k ($k) must be >= 2")
     require(trainRounds >= 1, s"trainRounds ($trainRounds) must be >= 1")
@@ -206,14 +207,13 @@ object TopicOps {
     // [[plsaTopicsN]]'s gate for the argument). Above it, training
     // still gets its own gate inside plsaTopicsN and the fold rounds
     // run distributed.
-    if (localFinishCap > 0 &&
-        n.schema("d").dataType == org.apache.spark.sql.types.LongType &&
-        nB.schema("d").dataType == org.apache.spark.sql.types.LongType) {
-      val r0 = n.unionAll(nB)
-        .agg(count(lit(1)), coalesce(sum("n"), lit(0L))).head()
-      if (r0.getLong(0) <= localFinishCap && r0.getLong(1) <= MaxLocalTokens)
-        return localPlsaFoldIn(n, nB, idCol, k, trainRounds, foldRounds)
-    }
+    lazy val r0 = n.unionAll(nB)
+      .agg(count(lit(1)), coalesce(sum("n"), lit(0L))).head()
+    if (LocalFinish.fits("TopicOps.plsaFoldIn", localFinishCap,
+          LocalFinish.longIds(n, "d") && LocalFinish.longIds(nB, "d"))(
+          r0.getLong(0)) &&
+        r0.getLong(1) <= MaxLocalTokens)
+      return localPlsaFoldIn(n, nB, idCol, k, trainRounds, foldRounds)
     // train on the base; keep only the frozen topic-word table
     val trained = plsaTopicsN(n, k, trainRounds,
       topWords = Int.MaxValue, materialize = materialize,

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.LocalFinish
 
 /** Unigram-LM tokenizer training (X295; Kudo ACL'18 — the
   * SentencePiece unigram model, the OTHER trained tokenizer family
@@ -49,24 +50,11 @@ object UnigramTokenizer {
   private def lnMicro(x: Column): Column =
     floor(log(x.cast("double")) * 1000000.0 + 0.5).cast("long")
 
-  /** Two-regime cut-over (r16; the MST/CC/suffix-array local-finisher
-    * discipline): the training state is VOCABULARY-bounded — spans are
-    * ≤ maxWordLen·maxPieceLen rows per distinct word — and the
-    * distributed loop costs ~37 checkpoints + ~105 AQE stage jobs of
-    * pure scheduler/planning overhead at test scale (7.6 s wall of
-    * which ~4 s is driver time between sub-second jobs). Below this
-    * many distinct words the whole hard-EM fit runs in ONE task over
-    * the word-count table ([[localTrain]]); above it the distributed
-    * loop runs unchanged. 200k words ≈ 6.4M span entries ≈ well inside
-    * one task's memory.
-    */
-  private val LocalFinishWords = 200000L
-
   def train(df: DataFrame, textCol: String, maxPieceLen: Int = 4,
       maxWordLen: Int = 8, minFreq: Long = 20L, rounds: Int = 2,
       topK: Int = 30,
       materialize: DataFrame => DataFrame = _.localCheckpoint(eager = true),
-      localCap: Long = LocalFinishWords)
+      localCap: Long = LocalFinish.Words)
       : DataFrame = {
     require(rounds >= 1 && maxPieceLen >= 1 && maxWordLen >= 1 && topK >= 1,
       "bad unigram trainer parameters")
@@ -74,7 +62,17 @@ object UnigramTokenizer {
       .select(explode(TextOps.words(col(textCol))).as("w"))
       .filter(col("w") =!= "" && length(col("w")) <= maxWordLen)
       .groupBy("w").agg(count(lit(1)).as("c")))
-    if (wc.count() <= localCap)
+    // Two-regime cut-over (r16; the MST/CC/suffix-array local-finisher
+    // discipline): the training state is VOCABULARY-bounded — spans are
+    // ≤ maxWordLen·maxPieceLen rows per distinct word — and the
+    // distributed loop costs ~37 checkpoints + ~105 AQE stage jobs of
+    // pure scheduler/planning overhead at test scale (7.6 s wall of
+    // which ~4 s is driver time between sub-second jobs). Under the cap
+    // (distinct words) the whole hard-EM fit runs in ONE task over the
+    // word-count table ([[localTrain]]); above it the distributed loop
+    // runs unchanged. 200k words ≈ 6.4M span entries ≈ well inside one
+    // task's memory.
+    if (LocalFinish.fits("UnigramTokenizer.train", localCap)(wc.count()))
       return localTrain(wc, maxPieceLen, maxWordLen, minFreq, rounds, topK)
     // all (start, len) spans of every distinct word
     val spans = materialize(wc
@@ -184,8 +182,8 @@ object UnigramTokenizer {
     }
     def lnMicroL(x: Long): Long =
       math.floor(math.log(x.toDouble) * 1000000.0 + 0.5).toLong
-    wc.select(col("w"), col("c").cast("long").as("c")).repartition(1)
-      .as[(String, Long)].mapPartitions { it =>
+    wc.select(col("w"), col("c").cast("long").as("c"))
+      .as[(String, Long)].coalesce(1).mapPartitions { it =>
         val words = it.toArray
         if (words.isEmpty) Iterator.empty
         else {

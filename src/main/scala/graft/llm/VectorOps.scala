@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.LocalFinish
 
 /** Embedding-vector operators: similarity search (exact top-k and
   * LSH-bucketed ANN) over an `array<float>` column.
@@ -1236,7 +1237,7 @@ object VectorOps {
   def topPrincipalComponent(df: DataFrame, vecCol: String, rounds: Int = 8,
       vScale: Long = 100000L,
       materialize: DataFrame => DataFrame = _.localCheckpoint(eager = true),
-      localFinishCap: Long = 4000000L)
+      localFinishCap: Long = LocalFinish.ModelRows)
       : DataFrame =
     pcaFromStats(covStats(df, vecCol), rounds, vScale, materialize,
       localFinishCap)
@@ -1271,7 +1272,7 @@ object VectorOps {
   def topPrincipalComponentIncremental(base: DataFrame, batch: DataFrame,
       vecCol: String, rounds: Int = 8, vScale: Long = 100000L,
       materialize: DataFrame => DataFrame = _.localCheckpoint(eager = true),
-      localFinishCap: Long = 4000000L)
+      localFinishCap: Long = LocalFinish.ModelRows)
       : DataFrame = {
     val (nA, sxA, sxxA) = covStats(base, vecCol)
     val (nB, sxB, sxxB) = covStats(batch, vecCol)
@@ -1283,7 +1284,7 @@ object VectorOps {
 
   private def pcaFromStats(stats: (DataFrame, DataFrame, DataFrame),
       rounds: Int, vScale: Long, materialize: DataFrame => DataFrame,
-      localFinishCap: Long = 4000000L)
+      localFinishCap: Long = LocalFinish.ModelRows)
       : DataFrame = {
     require(rounds >= 1, s"rounds ($rounds) must be >= 1")
     val (nDf, sx, sxx) = stats
@@ -1302,7 +1303,7 @@ object VectorOps {
     // integer matvecs: same Long sums, same toward-zero `div` rescale
     // and Rayleigh/round6 readout. PcaPowerSpec pins local ==
     // distributed.
-    if (localFinishCap > 0 && mat.count() <= localFinishCap)
+    if (LocalFinish.fits("VectorOps.pcaFromStats", localFinishCap)(mat.count()))
       return localPcaIteration(mat, rounds, vScale)
     var v = materialize(sx.select(col("i").as("j"), lit(vScale).as("vv")))
     def matvec(vt: DataFrame): DataFrame =

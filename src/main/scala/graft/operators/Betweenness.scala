@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.llm.TextOps
 
 /** Sampled-source betweenness centrality (X294; Brandes J. Math.
@@ -59,18 +58,15 @@ object Betweenness {
   def approx(symEdges: DataFrame, aCol: String, bCol: String,
       sources: DataFrame, levels: Int, topK: Int,
       materialize: DataFrame => DataFrame = _.localCheckpoint(eager = true),
-      localFinishCap: Long = 200000L)
+      localFinishCap: Long = LocalFinish.GraphEdges)
       : DataFrame = {
     require(levels >= 1, s"levels ($levels) must be >= 1")
     require(topK >= 1, s"topK ($topK) must be >= 1")
     val sym = materialize(
       symEdges.select(col(aCol).as("a"), col(bCol).as("b")))
-    val longIds = sym.schema("a").dataType == LongType &&
-      sources.schema("n").dataType == LongType
-    val symCap =
-      if (localFinishCap > Long.MaxValue / 2) Long.MaxValue
-      else 2 * localFinishCap
-    if (localFinishCap > 0 && longIds && sym.count() <= symCap)
+    if (LocalFinish.fits("Betweenness.approx", localFinishCap,
+        LocalFinish.longIds(sym, "a") && LocalFinish.longIds(sources, "n"),
+        symmetric = true)(sym.count()))
       return localApprox(sym, sources, levels, topK)
     var vis = materialize(sources.select(col("n").as("src"), col("n"),
       lit(0).as("d"), lit(1L).as("sigma")))
@@ -130,21 +126,11 @@ object Betweenness {
   private def localApprox(sym: DataFrame, sources: DataFrame,
       levels: Int, topK: Int): DataFrame = {
     val spark = sym.sparkSession
-    val tagged = sym.select(lit(1).as("t"), col("a").cast("long").as("x"),
-        col("b").cast("long").as("y"))
-      .unionByName(sources.select(lit(0).as("t"),
-        col("n").cast("long").as("x"), lit(0L).as("y")))
-    val out = tagged.repartition(1).rdd.mapPartitions { it =>
+    import spark.implicits._
+    LocalGraph.rows(sym.select("a", "b"), sources.select("n"))
+      .coalesce(1).mapPartitions { it =>
       import scala.collection.mutable
-      val adj = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
-      val srcs = mutable.ArrayBuffer.empty[Long]
-      it.foreach { r =>
-        require(!r.isNullAt(1) && !r.isNullAt(2),
-          "Betweenness: null node id")
-        if (r.getInt(0) == 0) srcs += r.getLong(1)
-        else adj.getOrElseUpdate(r.getLong(1),
-          mutable.ArrayBuffer.empty) += r.getLong(2)
-      }
+      val g = LocalGraph(it)
       // exact floor(sv * (1e6 + dw) / sw), nonneg operands; Long fast
       // path while the product provably fits, BigInt beyond
       def term(sv: Long, dw: Long, sw: Long): Long = {
@@ -152,61 +138,53 @@ object Betweenness {
         if (sv <= 3000000000L && f <= 3000000000L) sv * f / sw
         else (BigInt(sv) * BigInt(f) / BigInt(sw)).toLong
       }
-      // node -> (had >= 1 delta row with v != src, bc sum)
-      val bc = mutable.LongMap.empty[Long]
-      srcs.foreach { s =>
-        val level = mutable.LongMap.empty[Int]
-        val sigma = mutable.LongMap.empty[Long]
+      val bc = new Array[Long](g.n)
+      val hasBc = new Array[Boolean](g.n) // ≥ 1 delta row with v != src
+      val level = Array.fill(g.n)(-1)
+      val sigma = new Array[Long](g.n)
+      val delta = new Array[Long](g.n)
+      g.seeds.foreach { s =>
+        // BFS order: levels never decrease along it
+        val seen = mutable.ArrayBuffer(s)
         level(s) = 0; sigma(s) = 1L
-        var frontier = mutable.ArrayBuffer(s)
+        var from = 0
         var l = 1
-        while (l <= levels && frontier.nonEmpty) {
-          val acc = mutable.LongMap.empty[Long]
-          frontier.foreach { u =>
-            val su = sigma(u)
-            adj.get(u).foreach(_.foreach { v =>
-              if (!level.contains(v))
-                acc(v) = acc.getOrElse(v, 0L) + su
-            })
+        while (l <= levels && from < seen.length) {
+          val to = seen.length
+          (from until to).foreach { i =>
+            val u = seen(i)
+            (g.off(u) until g.off(u + 1)).foreach { k =>
+              val v = g.nbr(k)
+              if (level(v) == -1) { level(v) = l; seen += v }
+              if (level(v) == l) sigma(v) += sigma(u)
+            }
           }
-          val nxt = mutable.ArrayBuffer.empty[Long]
-          acc.foreach { case (v, sv) =>
-            level(v) = l; sigma(v) = sv; nxt += v
-          }
-          frontier = nxt
+          from = to
           l += 1
         }
         // backward by decreasing level over DAG-edge occurrences
-        val delta = mutable.LongMap.empty[Long]
-        val byLevel = Array.fill(levels)(mutable.ArrayBuffer.empty[Long])
-        level.foreach { case (v, dv) => if (dv < levels) byLevel(dv) += v }
-        ((levels - 1) to 0 by -1).foreach { dl =>
-          byLevel(dl).foreach { v =>
-            val sv = sigma(v)
-            var sum = 0L
-            var has = false
-            adj.get(v).foreach(_.foreach { w =>
-              if (level.get(w).contains(dl + 1)) {
-                has = true
-                sum += term(sv, delta.getOrElse(w, 0L), sigma(w))
-              }
-            })
-            if (has) {
-              delta(v) = sum
-              if (v != s) bc(v) = bc.getOrElse(v, 0L) + sum
+        seen.reverseIterator.filter(level(_) < levels).foreach { v =>
+          var sum = 0L
+          var has = false
+          (g.off(v) until g.off(v + 1)).foreach { k =>
+            val w = g.nbr(k)
+            if (level(w) == level(v) + 1) {
+              has = true
+              sum += term(sigma(v), delta(w), sigma(w))
             }
           }
+          if (has) {
+            delta(v) = sum
+            if (v != s) { bc(v) += sum; hasBc(v) = true }
+          }
         }
+        seen.foreach { v => level(v) = -1; sigma(v) = 0L; delta(v) = 0L }
       }
-      bc.toArray.sortWith { case ((n1, b1), (n2, b2)) =>
-        b1 > b2 || (b1 == b2 && n1 < n2)
-      }.take(topK).iterator.map { case (n, b) =>
-        org.apache.spark.sql.Row(n, b)
-      }
-    }
-    spark.createDataFrame(out, StructType(Seq(
-      StructField("node", LongType, nullable = false),
-      StructField("bc_micro", LongType, nullable = false))))
+      (0 until g.n).filter(hasBc).map(v => (g.ids(v), bc(v)))
+        .sortWith { case ((n1, b1), (n2, b2)) =>
+          b1 > b2 || (b1 == b2 && n1 < n2)
+        }.take(topK).iterator
+    }.toDF("node", "bc_micro")
       .orderBy(col("bc_micro").desc, col("node"))
   }
 }

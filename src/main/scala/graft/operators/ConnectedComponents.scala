@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -59,7 +59,7 @@ object ConnectedComponents {
       dstCol: String,
       maxIter: Int = 25,
       materialize: DataFrame => DataFrame = Iterate.cut,
-      localFinishCap: Long = 200000L)
+      localFinishCap: Long = LocalFinish.GraphEdges)
       : DataFrame = {
     // both directions once; reused every round
     val sym = materialize(
@@ -69,17 +69,9 @@ object ConnectedComponents {
     // edge list fits one task, a single-task union–find computes the
     // identical (node, min-reachable-id) fixpoint without paying
     // O(diameter) rounds × (join + agg + checkpoint + probe) jobs.
-    // sym carries 2 rows per input edge, hence the 2× cap.
-    // cap > 0 is checked FIRST so cap=0 callers never pay the count
-    // job (r15 advisor); the doubling is clamped so a huge
-    // caller-supplied cap cannot overflow and silently disable the
-    // fast path.
-    val symCap =
-      if (localFinishCap > Long.MaxValue / 2) Long.MaxValue
-      else 2 * localFinishCap
-    if (localFinishCap > 0 &&
-        localFinishSupported(sym.schema("node").dataType) &&
-        sym.count() <= symCap)
+    if (LocalFinish.fits("ConnectedComponents.labelPropagation",
+        localFinishCap, LocalFinish.keyIds(sym, "node"),
+        symmetric = true)(sym.count()))
       return materialize(localComponents(sym))
     // init = min over the CLOSED neighborhood — exactly what round 1
     // would compute from self-labels, for the price of the distinct()
@@ -135,7 +127,7 @@ object ConnectedComponents {
       dstCol: String,
       maxRounds: Int = 20,
       materialize: DataFrame => DataFrame = Iterate.cut,
-      localFinishCap: Long = 200000L)
+      localFinishCap: Long = LocalFinish.GraphEdges)
       : DataFrame = {
     // canonical (a < b) distinct undirected edges, self-loops dropped
     var cur = materialize(
@@ -152,11 +144,11 @@ object ConnectedComponents {
     // mid-round could never reappear). A one-task union–find over the
     // current edge list therefore yields the identical
     // (node, component-min) table the remaining rounds would.
-    val cap =
-      if (localFinishSupported(cur.schema("a").dataType)) localFinishCap
-      else 0L
+    val supported = LocalFinish.keyIds(cur, "a")
+    def fits(n: Long) = LocalFinish.fits("ConnectedComponents.alternatingStars",
+      localFinishCap, supported)(n)
     var n = cur.count()
-    if (n > 0 && n <= cap) return materialize(localComponents(cur))
+    if (n > 0 && fits(n)) return materialize(localComponents(cur))
 
     def sym(e: DataFrame): DataFrame =
       e.select(col("a").as("node"), col("b").as("nbr"))
@@ -203,7 +195,7 @@ object ConnectedComponents {
       round += 1
       if (!done) {
         n = cur.count()
-        if (n <= cap) return materialize(localComponents(cur))
+        if (fits(n)) return materialize(localComponents(cur))
       }
     }
     require(done, s"alternatingStars did not converge within $maxRounds rounds")
@@ -285,12 +277,6 @@ object ConnectedComponents {
     oldFinal.unionByName(newFinal)
   }
 
-  private def localFinishSupported(
-      dt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    dt == LongType || dt == IntegerType || dt == StringType
-  }
-
   /** Spark's StringType min/least under the default (binary) collation
     * is UTF8String order = unsigned byte-wise comparison of the UTF-8
     * encoding. java.lang.String.compareTo is UTF-16 code-unit order,
@@ -316,11 +302,17 @@ object ConnectedComponents {
     * the component's minimum id, for exactly the nodes appearing in
     * the list — the same contract as the iterative fixpoints. Node
     * ids must be long/int/string (see [[utf8Lt]] for why string
-    * comparison is byte-wise) and non-null.
+    * comparison is byte-wise).
+    *
+    * A row with a null endpoint gets what [[labelPropagation]]'s
+    * rounds give it: its equi-joins never match a null id, so the row
+    * merges nothing, its non-null endpoint is still a node, and the
+    * null node's label stays at its initial closed-neighborhood
+    * minimum — the least non-null id paired with null (null when
+    * there is none).
     */
   private[graft] def localComponents(pairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.types._
-    val spark = pairs.sparkSession
     val dt = pairs.schema.fields(0).dataType
     val lt: (Any, Any) => Boolean = dt match {
       case LongType =>
@@ -332,7 +324,8 @@ object ConnectedComponents {
       case other => throw new IllegalArgumentException(
         s"localComponents: unsupported node id type $other")
     }
-    val out = pairs.repartition(1).rdd.mapPartitions { it =>
+    def less(x: Any, y: Any): Boolean = y == null || lt(x, y)
+    pairs.coalesce(1).mapPartitions { it =>
       import scala.collection.mutable
       val idx = mutable.HashMap.empty[Any, Int]
       val keys = mutable.ArrayBuffer.empty[Any]
@@ -347,26 +340,32 @@ object ConnectedComponents {
         }
         i
       }
+      var nullNode = false
+      var nullLabel: Any = null
       it.foreach { r =>
-        require(!r.isNullAt(0) && !r.isNullAt(1),
-          "localComponents: null node id — the CC contract assumes " +
-            "non-null ids")
-        val ra = find(ix(r.get(0))); val rb = find(ix(r.get(1)))
-        if (ra != rb) parent(ra) = rb
+        if (r.isNullAt(0) || r.isNullAt(1)) {
+          nullNode = true
+          Seq(r.get(0), r.get(1)).filter(_ != null).foreach { v =>
+            ix(v)
+            if (less(v, nullLabel)) nullLabel = v
+          }
+        } else {
+          val ra = find(ix(r.get(0))); val rb = find(ix(r.get(1)))
+          if (ra != rb) parent(ra) = rb
+        }
       }
       val n = keys.length
       val minOf = new Array[Any](n)
       var i = 0
       while (i < n) {
         val r = find(i)
-        if (minOf(r) == null || lt(keys(i), minOf(r))) minOf(r) = keys(i)
+        if (less(keys(i), minOf(r))) minOf(r) = keys(i)
         i += 1
       }
-      (0 until n).iterator.map(i =>
-        org.apache.spark.sql.Row(keys(i), minOf(find(i))))
-    }
-    spark.createDataFrame(out, StructType(Seq(
+      (0 until n).iterator.map(i => Row(keys(i), minOf(find(i)))) ++
+        (if (nullNode) Iterator(Row(null, nullLabel)) else Iterator.empty)
+    }(org.apache.spark.sql.Encoders.row(StructType(Seq(
       StructField("node", dt, nullable = true),
-      StructField("label", dt, nullable = true))))
+      StructField("label", dt, nullable = true)))))
   }
 }

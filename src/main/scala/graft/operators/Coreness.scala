@@ -51,7 +51,7 @@ object Coreness {
       dstCol: String,
       maxRounds: Int = 60,
       frontSwitch: Double = 0.125,
-      localFinishCap: Long = 200000L): DataFrame = {
+      localFinishCap: Long = LocalFinish.GraphEdges): DataFrame = {
     // Cut the caller's edge pipeline ONCE before symmetrizing — the
     // unionAll's two branches are different projections of `e`, so a
     // lazy `e` (e.g. the capped bipartite projection: scan + distinct
@@ -65,9 +65,8 @@ object Coreness {
     // overhead. The replay is round-for-round the identical recurrence
     // (c_v ← H of neighbor multiset), so the fixpoint values match by
     // construction; CorenessSpec pins local == distributed.
-    if (localFinishCap > 0 &&
-        e.schema("a").dataType == org.apache.spark.sql.types.LongType &&
-        e.count() <= localFinishCap)
+    if (LocalFinish.fits("Coreness.decompose", localFinishCap,
+        LocalFinish.longIds(e, "a"))(e.count()))
       return localDecompose(e, maxRounds)
     val und = Iterate.cut(
       e.select(col("a").as("v"), col("b").as("u"))
@@ -143,19 +142,11 @@ object Coreness {
     * non-null (the projection feed guarantees both).
     */
   private def localDecompose(e: DataFrame, maxRounds: Int): DataFrame = {
-    import org.apache.spark.sql.types._
     val spark = e.sparkSession
-    val out = e.repartition(1).rdd.mapPartitions { it =>
-      import scala.collection.mutable
-      val adj = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
-      it.foreach { r =>
-        require(!r.isNullAt(0) && !r.isNullAt(1), "Coreness: null node id")
-        val a = r.getLong(0); val b = r.getLong(1)
-        adj.getOrElseUpdate(a, mutable.ArrayBuffer.empty) += b
-        adj.getOrElseUpdate(b, mutable.ArrayBuffer.empty) += a
-      }
-      var cur = mutable.LongMap.empty[Long]
-      adj.foreach { case (n, nb) => cur(n) = nb.length.toLong }
+    import spark.implicits._
+    LocalGraph.rows(e).coalesce(1).mapPartitions { it =>
+      val g = LocalGraph(it, undirected = true)
+      var cur = Array.tabulate(g.n)(g.degree(_).toLong)
       var rounds = 0
       var changed = true
       while (changed) {
@@ -163,29 +154,28 @@ object Coreness {
         if (rounds > maxRounds) throw new IllegalStateException(
           s"Coreness: no fixpoint after $maxRounds rounds — raise maxRounds")
         changed = false
-        val next = mutable.LongMap.empty[Long]
-        adj.foreach { case (n, nb) =>
-          val vals = nb.map(cur).toArray
+        val next = new Array[Long](g.n)
+        var v = 0
+        while (v < g.n) {
+          val vals = (g.off(v) until g.off(v + 1)).map(k => cur(g.nbr(k))).toArray
           java.util.Arrays.sort(vals)
           // desc rank r = 1.. over the sorted-desc values
           var h = 0L
           var i = 0
           val m = vals.length
           while (i < m) {
-            val v = vals(m - 1 - i) // i-th largest
-            val hv = math.min((i + 1).toLong, v)
+            val x = vals(m - 1 - i) // i-th largest
+            val hv = math.min((i + 1).toLong, x)
             if (hv > h) h = hv
             i += 1
           }
-          next(n) = h
-          if (h != cur(n)) changed = true
+          next(v) = h
+          if (h != cur(v)) changed = true
+          v += 1
         }
         cur = next
       }
-      cur.iterator.map { case (n, c) => org.apache.spark.sql.Row(n, c) }
-    }
-    spark.createDataFrame(out, StructType(Seq(
-      StructField("node", LongType, nullable = false),
-      StructField("coreness", LongType, nullable = false))))
+      (0 until g.n).iterator.map(v => (g.ids(v), cur(v)))
+    }.toDF("node", "coreness")
   }
 }

@@ -38,7 +38,7 @@ object GraphColoring {
   def jonesPlassmann(edges: DataFrame, srcCol: String, dstCol: String,
       salt: String = "jp", maxRounds: Int = 16,
       materialize: DataFrame => DataFrame = Iterate.cut,
-      localFinishCap: Long = 200000L): DataFrame = {
+      localFinishCap: Long = LocalFinish.GraphEdges): DataFrame = {
     def prio(c: Column): Column = struct(
       conv(substring(md5(concat(lit(s"$salt|"), c.cast("string"))),
         1, 15), 16, 10).cast("long").as("h"),
@@ -47,8 +47,7 @@ object GraphColoring {
     val symAll = materialize(
       canon.select(col("lo").as("node"), col("hi").as("nbr"))
         .unionByName(canon.select(col("hi").as("node"), col("lo").as("nbr"))))
-    val longIds =
-      symAll.schema("node").dataType == org.apache.spark.sql.types.LongType
+    val longIds = LocalFinish.longIds(symAll, "node")
 
     // LOCAL FINISH (the KTruss/Mst one-task discipline — valid at any
     // round): with a fixed priority order, JP is EXACTLY sequential
@@ -68,41 +67,36 @@ object GraphColoring {
         boundary: DataFrame): DataFrame = {
       val spark = uncolP.sparkSession
       import spark.implicits._
-      val tagged = uncolP.select(lit(0).as("t"), col("node").as("x"),
-          col("h").as("y"))
-        .unionByName(eCur.select(lit(1).as("t"),
-          col("node").cast("long").as("x"), col("nbr").cast("long").as("y")))
-        .unionByName(boundary.select(lit(2).as("t"),
-          col("node").cast("long").as("x"), col("color").cast("long").as("y")))
-      tagged.as[(Int, Long, Long)].repartition(1).mapPartitions { it =>
-        import scala.collection.mutable
-        val prioOf = mutable.LongMap.empty[Long]
-        val adj = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
-        val used = mutable.LongMap.empty[mutable.HashSet[Int]]
-        it.foreach {
-          case (0, n, h) => prioOf(n) = h
-          case (1, n, m) =>
-            adj.getOrElseUpdate(n, mutable.ArrayBuffer.empty) += m
-          case (2, n, c) =>
-            used.getOrElseUpdate(n, mutable.HashSet.empty) += c.toInt
-        }
+      // boundary colors ride as seeds with payload -(color + 1); the
+      // priorities h are nonnegative (15 hex digits)
+      val seeds = uncolP.select(col("node"), col("h")).unionByName(boundary
+        .select(col("node"), (-col("color") - 1).cast("long").as("h")))
+      LocalGraph.rows(eCur.select("node", "nbr"), seeds)
+        .coalesce(1).mapPartitions { it =>
+        val g = LocalGraph(it)
+        // colors already taken around each uncolored node
+        val taken = Array.fill(g.n)(scala.collection.mutable.HashSet.empty[Int])
+        val (prio, palette) = g.seeds.indices.partition(g.seedValue(_) >= 0)
+        palette.foreach(i => taken(g.seeds(i)) += (-g.seedValue(i) - 1).toInt)
         // decreasing (h, id): the JP priority struct order. Explicit
         // comparator, NOT sortBy((-h, -id)) — negating Long.MinValue
         // overflows to itself and would diverge from the distributed
         // struct(h, id) comparison (r15 advisor).
-        val order = prioOf.toArray.sortWith { case ((id1, h1), (id2, h2)) =>
+        val order = prio.sortWith { (i, j) =>
+          val (h1, h2) = (g.seedValue(i), g.seedValue(j))
+          val (id1, id2) = (g.ids(g.seeds(i)), g.ids(g.seeds(j)))
           h1 > h2 || (h1 == h2 && id1 > id2)
         }
-        val color = mutable.LongMap.empty[Int]
-        order.iterator.map { case (id, _) =>
-          val taken = used.getOrElse(id, mutable.HashSet.empty[Int])
-          adj.getOrElse(id, mutable.ArrayBuffer.empty).foreach { m =>
-            color.get(m).foreach(taken += _)
+        val color = Array.fill(g.n)(-1)
+        order.iterator.map { i =>
+          val v = g.seeds(i)
+          (g.off(v) until g.off(v + 1)).foreach { k =>
+            if (color(g.nbr(k)) >= 0) taken(v) += color(g.nbr(k))
           }
           var c = 0
-          while (taken(c)) c += 1
-          color(id) = c
-          (id, c)
+          while (taken(v)(c)) c += 1
+          color(v) = c
+          (g.ids(v), c)
         }
       }.toDF("node", "color")
     }
@@ -111,16 +105,14 @@ object GraphColoring {
     var uncol = materialize(symAll.select("node").distinct())
     var colored = symAll
       .select(col("node"), lit(0).as("color")).filter(lit(false))
-    val cap = if (longIds) localFinishCap else 0L
     var round = 0
     var done = uncol.isEmpty
     while (!done && round < maxRounds) {
-      // cap > 0 short-circuits BEFORE the two count jobs (cap=0 callers
-      // — non-long ids — paid them every round for nothing), and `e`
-      // is the SYMMETRIC edge list (2 rows per edge), so the edge
-      // budget compares against 2×cap — the convention the other
-      // local finishers (ConnectedComponents, LabelPropagation) use.
-      if (cap > 0 && uncol.count() <= cap && e.count() <= 2 * cap) {
+      // `e` is the SYMMETRIC edge list (2 rows per edge)
+      if (LocalFinish.fits("GraphColoring.jonesPlassmann nodes",
+            localFinishCap, longIds)(uncol.count()) &&
+          LocalFinish.fits("GraphColoring.jonesPlassmann edges",
+            localFinishCap, longIds, symmetric = true)(e.count())) {
         val boundary = uncol
           .join(symAll, "node")
           .join(colored.select(col("node").as("_n2"), col("color")),

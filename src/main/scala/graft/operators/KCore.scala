@@ -56,7 +56,7 @@ object KCore {
       dstCol: String,
       k: Int,
       maxRounds: Int = 50,
-      localFinishCap: Long = 200000L): DataFrame = {
+      localFinishCap: Long = LocalFinish.GraphEdges): DataFrame = {
     require(k >= 1, s"k ($k) must be >= 1")
     var e = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .localCheckpoint()
@@ -73,8 +73,8 @@ object KCore {
     // Valid at ANY round for the same reason (the r15 KTruss
     // argument); here the input is already counted, so the gate is
     // free.
-    if (localFinishCap > 0 && prevCount <= localFinishCap &&
-        localFinishSupported(e))
+    val supported = LocalFinish.keyIds(e, "a", "b")
+    if (LocalFinish.fits("KCore.coreEdges", localFinishCap, supported)(prevCount))
       return localCoreEdges(e, k)
     var rounds = 0
     var done = false
@@ -93,17 +93,11 @@ object KCore {
       done = after == prevCount
       prevCount = after
       rounds += 1
-      if (localFinishCap > 0 && after <= localFinishCap &&
-          localFinishSupported(e) && !done)
+      if (!done &&
+          LocalFinish.fits("KCore.coreEdges", localFinishCap, supported)(after))
         return localCoreEdges(e, k)
     }
     e
-  }
-
-  private def localFinishSupported(e: DataFrame): Boolean = {
-    import org.apache.spark.sql.types._
-    Seq(e.schema.fields(0).dataType, e.schema.fields(1).dataType)
-      .forall(dt => dt == LongType || dt == IntegerType || dt == StringType)
   }
 
   /** One-task sequential peel to the unique k-core edge set. Null-
@@ -116,9 +110,7 @@ object KCore {
     * same multiset the distributed semi-joins keep.
     */
   private def localCoreEdges(e: DataFrame, k: Int): DataFrame = {
-    val spark = e.sparkSession
-    val schema = e.schema
-    val out = e.repartition(1).rdd.mapPartitions { it =>
+    e.coalesce(1).mapPartitions { it =>
       import scala.collection.mutable
       val live = it.filter(r => !r.isNullAt(0) && !r.isNullAt(1)).toArray
       val deg = mutable.HashMap.empty[Any, Long]
@@ -151,7 +143,6 @@ object KCore {
         }
       }
       live.iterator.zipWithIndex.collect { case (r, i) if alive(i) => r }
-    }
-    spark.createDataFrame(out, schema)
+    }(org.apache.spark.sql.Encoders.row(e.schema))
   }
 }

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** k-truss decomposition (Cohen 2008) — the TRIANGLE-grade community
   * filter one rung above k-core: keep the maximal subgraph where
@@ -161,46 +160,16 @@ object KTruss {
   private[graft] def localFinish(e: DataFrame, k: Int): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
-    e.select(col("a"), col("b")).as[(Long, Long)]
-      .repartition(1)
+    LocalGraph.rows(e.select("a", "b")).coalesce(1)
       .mapPartitions { it =>
+        // dense vertex indices and CSR adjacency carrying the edge index
+        // — no boxing anywhere on the hot path (the boxed HashSet
+        // version measured ~5 s on 190k edges; this one is sub-second)
         import scala.collection.mutable
-        // dense vertex indices → packed-long edge keys, CSR adjacency
-        // carrying the edge index — no boxing anywhere on the hot path
-        // (the boxed HashSet version measured ~5 s on 190k edges; this
-        // one is sub-second)
-        val edges = it.toArray
-        val m = edges.length
-        val idx = mutable.LongMap.empty[Int]
-        def ix(v: Long): Int =
-          idx.getOrElseUpdate(v, idx.size)
-        val ea = new Array[Int](m)
-        val eb = new Array[Int](m)
-        var i = 0
-        while (i < m) { ea(i) = ix(edges(i)._1); eb(i) = ix(edges(i)._2); i += 1 }
-        val n = idx.size
-        def pack(u: Int, v: Int): Long =
-          if (u < v) (u.toLong << 32) | v.toLong
-          else (v.toLong << 32) | u.toLong
-        val edgeOf = mutable.LongMap.empty[Int]
-        i = 0
-        while (i < m) { edgeOf(pack(ea(i), eb(i))) = i; i += 1 }
-        // CSR: nbr + the edge index of each (vertex, neighbor) slot
-        val deg = new Array[Int](n)
-        i = 0
-        while (i < m) { deg(ea(i)) += 1; deg(eb(i)) += 1; i += 1 }
-        val off = new Array[Int](n + 1)
-        i = 0
-        while (i < n) { off(i + 1) = off(i) + deg(i); i += 1 }
-        val cur = java.util.Arrays.copyOf(off, n)
-        val nbr = new Array[Int](2 * m)
-        val nbrEdge = new Array[Int](2 * m)
-        i = 0
-        while (i < m) {
-          nbr(cur(ea(i))) = eb(i); nbrEdge(cur(ea(i))) = i; cur(ea(i)) += 1
-          nbr(cur(eb(i))) = ea(i); nbrEdge(cur(eb(i))) = i; cur(eb(i)) += 1
-          i += 1
-        }
+        val g = LocalGraph(it, undirected = true)
+        val m = g.m; val n = g.n
+        val off = g.off; val nbr = g.nbr; val nbrEdge = g.slotEdge
+        val ea = g.src; val eb = g.dst
         // sort each vertex's slots by neighbor id (parallel arrays)
         var v = 0
         while (v < n) {
@@ -234,7 +203,7 @@ object KTruss {
             }
           }
         }
-        i = 0
+        var i = 0
         while (i < m) {
           var s = 0
           forEachTriangle(i)((_, _) => s += 1)
@@ -261,7 +230,7 @@ object KTruss {
           queue = next.toArray
         }
         (0 until m).iterator.filter(alive(_))
-          .map(ei => (edges(ei)._1, edges(ei)._2, sup(ei).toLong))
+          .map(ei => (g.ids(ea(ei)), g.ids(eb(ei)), sup(ei).toLong))
       }
       .toDF("a", "b", "support")
   }
@@ -274,12 +243,12 @@ object KTruss {
       dstCol: String,
       k: Int,
       maxRounds: Int = 60,
-      localFinishCap: Long = 200000L): DataFrame = {
+      localFinishCap: Long = LocalFinish.GraphEdges): DataFrame = {
     require(k >= 3, s"k ($k) must be >= 3 — below that every edge is a truss")
 
     val e0 = Iterate.cut(
       edges.select(col(srcCol).as("a"), col(dstCol).as("b")))
-    val longIds = e0.schema.fields.forall(_.dataType == LongType)
+    val longIds = LocalFinish.longIds(e0, "a", "b")
     // carried state: (a, b, s) — every surviving edge with its EXACT
     // support within the current survivor set
     var prev = e0.count()
@@ -295,7 +264,8 @@ object KTruss {
       val after = keep.count()
       if (after == prev || after == 0) {
         result = keep.select(col("a"), col("b"), col("s").as("support"))
-      } else if (longIds && after <= localFinishCap) {
+      } else if (LocalFinish.fits("KTruss.truss", localFinishCap,
+          longIds)(after)) {
         // survivors fit one task: the remaining peel is scheduler-
         // bound (measured ~0.7 s/round of pure job overhead on
         // sub-ms peel work) — finish it in a single job

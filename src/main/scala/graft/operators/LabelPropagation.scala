@@ -36,7 +36,7 @@ object LabelPropagation {
   def communities(edges: DataFrame, aCol: String, bCol: String,
       wCol: String, rounds: Int,
       materialize: DataFrame => DataFrame = _.localCheckpoint(eager = true),
-      localFinishCap: Long = 200000L)
+      localFinishCap: Long = LocalFinish.GraphEdges)
       : DataFrame = {
     require(rounds >= 1, s"rounds ($rounds) must be >= 1")
     val sym = materialize(
@@ -49,37 +49,28 @@ object LabelPropagation {
     // ids — so a one-task replay over exact Long arithmetic produces
     // the identical round-r labels without 2 exchanges + checkpoint
     // per round. Gate: long ids + long weights, edge rows fit a task.
-    val lt = org.apache.spark.sql.types.LongType
-    if (sym.schema("n").dataType == lt && sym.schema("w").dataType == lt &&
-        localFinishCap > 0 && sym.count() <= 2 * localFinishCap) {
+    if (LocalFinish.fits("LabelPropagation.communities", localFinishCap,
+        LocalFinish.longIds(sym, "n", "w"), symmetric = true)(sym.count())) {
       val spark = sym.sparkSession
       import spark.implicits._
       // materialized: consumers (e.g. modularity) join the label
       // table several times — without the barrier each consumer
       // re-runs the one-task replay
-      return materialize(sym.as[(Long, Long, Long)].repartition(1).mapPartitions { it =>
+      return materialize(LocalGraph.rows(sym).coalesce(1).mapPartitions { it =>
         import scala.collection.mutable
-        val idx = mutable.LongMap.empty[Int]
-        val ids = mutable.ArrayBuffer.empty[Long]
-        def ix(v: Long): Int = idx.getOrElseUpdate(v, {
-          ids += v; ids.length - 1
-        })
-        val en = mutable.ArrayBuffer.empty[Int]
-        val em = mutable.ArrayBuffer.empty[Int]
-        val ew = mutable.ArrayBuffer.empty[Long]
-        it.foreach { case (n, m, w) => en += ix(n); em += ix(m); ew += w }
-        val nv = ids.length
-        var lbl = Array.tabulate(nv)(i => ids(i))
+        val g = LocalGraph(it)
+        val nv = g.n
+        var lbl = g.ids.clone()
         var r = 0
         while (r < rounds) {
           // per-node (label -> vote weight), then argmax with ties
           // to the SMALLEST label — exactly max(struct(vw, -lbl))
           val votes = Array.fill(nv)(mutable.LongMap.empty[Long])
           var i = 0
-          while (i < en.length) {
-            val v = votes(en(i))
-            val l = lbl(em(i))
-            v(l) = v.getOrElse(l, 0L) + ew(i)
+          while (i < g.m) {
+            val v = votes(g.src(i))
+            val l = lbl(g.dst(i))
+            v(l) = v.getOrElse(l, 0L) + g.weight(i)
             i += 1
           }
           val next = new Array[Long](nv)
@@ -101,7 +92,7 @@ object LabelPropagation {
           lbl = next
           r += 1
         }
-        (0 until nv).iterator.map(i => (ids(i), lbl(i)))
+        (0 until nv).iterator.map(i => (g.ids(i), lbl(i)))
       }.toDF("n", "lbl"))
     }
     var labels = materialize(

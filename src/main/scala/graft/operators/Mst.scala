@@ -66,7 +66,7 @@ object Mst {
   def boruvka(edges: DataFrame, loCol: String, hiCol: String,
       wCol: String, maxRounds: Int = 16,
       materialize: DataFrame => DataFrame = Iterate.cut,
-      localFinishCap: Long = 200000L)
+      localFinishCap: Long = LocalFinish.GraphEdges)
       : DataFrame = {
     // canonical undirected edges keyed by their (initially trivial)
     // component ids; parallel edges -> min weight
@@ -102,17 +102,15 @@ object Mst {
     // the whole forest fits the cap and ZERO distributed rounds run.
     // The fast path needs long ids (callers pass long vec_ids);
     // other id types keep the pure distributed loop.
-    val cap =
-      if (e.schema("lo").dataType ==
-            org.apache.spark.sql.types.LongType &&
-          e.schema("hi").dataType ==
-            org.apache.spark.sql.types.LongType) localFinishCap
-      else 0L
+    val longIds = LocalFinish.longIds(e, "lo", "hi")
+    def fits(n: Long) =
+      n > 0 && LocalFinish.fits("Mst.boruvka", localFinishCap, longIds)(n)
 
     val parts = ArrayBuffer.empty[DataFrame]
     var round = 0
     var n = e.count()
-    while (n > cap && round < maxRounds) {
+    var local = fits(n)
+    while (n > 0 && !local && round < maxRounds) {
       // each live component's minimum incident edge under (w, lo, hi)
       // — both directions in ONE pass (explode), then a combine min
       val minE = materialize(e
@@ -162,10 +160,11 @@ object Mst {
         .select(col("clo"), col("chi"), col("m.lo").as("lo"),
           col("m.hi").as("hi"), col("m.w").as("w")))
       n = e.count()
+      local = fits(n)
       round += 1
     }
-    require(n <= cap, s"boruvka did not converge within $maxRounds rounds")
-    if (n > 0) parts += localKruskal(e)
+    require(n == 0 || local, s"boruvka did not converge within $maxRounds rounds")
+    if (local) parts += localKruskal(e)
 
     if (parts.isEmpty)
       edges.sparkSession.createDataFrame(
@@ -188,15 +187,12 @@ object Mst {
     import spark.implicits._
     e.select(col("clo"), col("chi"), col("lo"), col("hi"), col("w"))
       .as[(Long, Long, Long, Long, Long)]
-      .repartition(1)
+      .coalesce(1)
       .mapPartitions { it =>
-        import scala.collection.mutable
         val edges = it.toArray.sortBy(t => (t._5, t._3, t._4))
-        val idx = mutable.LongMap.empty[Int]
-        val parent = mutable.ArrayBuffer.empty[Int]
-        def ix(v: Long): Int = idx.getOrElseUpdate(v, {
-          parent += parent.length; parent.length - 1
-        })
+        // components as dense ids; edge k is edges(k)
+        val g = LocalGraph(edges.iterator.map(t => (1, t._1, t._2, 0L)))
+        val parent = Array.range(0, g.n)
         def find(i0: Int): Int = {
           var i = i0
           while (parent(i) != i) {
@@ -204,11 +200,11 @@ object Mst {
           }
           i
         }
-        val out = mutable.ArrayBuffer.empty[(Long, Long, Long)]
+        val out = ArrayBuffer.empty[(Long, Long, Long)]
         var k = 0
         while (k < edges.length) {
           val t = edges(k)
-          val ra = find(ix(t._1)); val rb = find(ix(t._2))
+          val ra = find(g.src(k)); val rb = find(g.dst(k))
           if (ra != rb) { parent(ra) = rb; out += ((t._3, t._4, t._5)) }
           k += 1
         }

@@ -4,7 +4,6 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Sampled-source neighborhood function N(r) — the ANF/HyperANF
   * readout (Palmer et al. KDD'02; Boldi–Vigna WWW'11): how many nodes
@@ -44,17 +43,14 @@ object NeighborhoodFunction {
 
   def sample(sym: DataFrame, aCol: String, bCol: String,
       seeds: DataFrame, seedCol: String, maxHops: Int = 5,
-      localFinishCap: Long = 200000L): DataFrame = {
+      localFinishCap: Long = LocalFinish.GraphEdges): DataFrame = {
     require(maxHops >= 1, s"maxHops ($maxHops) must be >= 1")
     val e = sym.select(col(aCol).as("_a"), col(bCol).as("_b"))
       .localCheckpoint(eager = true)
-    val longIds = e.schema("_a").dataType == LongType &&
-      seeds.schema(seedCol).dataType == LongType
-    val symCap =
-      if (localFinishCap > Long.MaxValue / 2) Long.MaxValue
-      else 2 * localFinishCap
     val counts: DataFrame =
-      if (localFinishCap > 0 && longIds && e.count() <= symCap)
+      if (LocalFinish.fits("NeighborhoodFunction.sample", localFinishCap,
+          LocalFinish.longIds(e, "_a") && LocalFinish.longIds(seeds, seedCol),
+          symmetric = true)(e.count()))
         localCounts(e, seeds, seedCol, maxHops)
       else {
         var frontier = seeds.select(col(seedCol).as("src")).distinct()
@@ -103,45 +99,34 @@ object NeighborhoodFunction {
   private def localCounts(e: DataFrame, seeds: DataFrame,
       seedCol: String, maxHops: Int): DataFrame = {
     val spark = e.sparkSession
-    val tagged = e.select(lit(1).as("t"), col("_a").cast("long").as("x"),
-        col("_b").cast("long").as("y"))
-      .unionByName(seeds.select(lit(0).as("t"),
-        col(seedCol).cast("long").as("x"), lit(0L).as("y")))
-    val out = tagged.repartition(1).rdd.mapPartitions { it =>
-      import scala.collection.mutable
-      val adj = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
-      val srcs = mutable.HashSet.empty[Long] // distinct, as distributed
-      it.foreach { r =>
-        require(!r.isNullAt(1) && !r.isNullAt(2),
-          "NeighborhoodFunction: null node id")
-        if (r.getInt(0) == 0) srcs += r.getLong(1)
-        else adj.getOrElseUpdate(r.getLong(1),
-          mutable.ArrayBuffer.empty) += r.getLong(2)
-      }
+    import spark.implicits._
+    LocalGraph.rows(e, seeds.select(seedCol)).coalesce(1).mapPartitions { it =>
+      val g = LocalGraph(it)
+      val srcs = g.seeds.distinct // distinct, as distributed
       val newly = new Array[Long](maxHops + 1)
-      newly(0) = srcs.size.toLong
+      newly(0) = srcs.length.toLong
+      val visited = new Array[Boolean](g.n)
       srcs.foreach { s =>
-        val visited = mutable.HashSet(s)
-        var frontier = mutable.ArrayBuffer(s)
+        val seen = ArrayBuffer(s) // BFS order
+        visited(s) = true
+        var from = 0
         var r = 1
-        while (r <= maxHops && frontier.nonEmpty) {
-          val fresh = mutable.HashSet.empty[Long]
-          frontier.foreach { u =>
-            adj.get(u).foreach(_.foreach { v =>
-              if (!visited.contains(v)) fresh += v
-            })
+        while (r <= maxHops && from < seen.length) {
+          val to = seen.length
+          (from until to).foreach { i =>
+            val u = seen(i)
+            (g.off(u) until g.off(u + 1)).foreach { k =>
+              val v = g.nbr(k)
+              if (!visited(v)) { visited(v) = true; seen += v }
+            }
           }
-          newly(r) += fresh.size.toLong
-          visited ++= fresh
-          frontier = mutable.ArrayBuffer.from(fresh)
+          newly(r) += (seen.length - to).toLong
+          from = to
           r += 1
         }
+        seen.foreach(visited(_) = false)
       }
-      (0 to maxHops).iterator.map(r =>
-        org.apache.spark.sql.Row(r, newly(r)))
-    }
-    spark.createDataFrame(out, StructType(Seq(
-      StructField("hop", IntegerType, nullable = false),
-      StructField("newly", LongType, nullable = false))))
+      (0 to maxHops).iterator.map(r => (r, newly(r)))
+    }.toDF("hop", "newly")
   }
 }

@@ -44,7 +44,7 @@ object Scc {
   def components(edges: DataFrame, nodes: DataFrame,
       maxOuter: Int = 10, maxInner: Int = 50,
       materialize: DataFrame => DataFrame = Iterate.cut,
-      localFinishCap: Long = 200000L)
+      localFinishCap: Long = LocalFinish.GraphEdges)
       : DataFrame = {
 
     def fixpointMin(e: DataFrame, init: DataFrame): DataFrame = {
@@ -68,9 +68,7 @@ object Scc {
     }
 
     var remaining = materialize(nodes.select(col("id")))
-    val longIds =
-      remaining.schema("id").dataType == org.apache.spark.sql.types.LongType
-    val cap = if (longIds) localFinishCap else 0L
+    val longIds = LocalFinish.longIds(remaining, "id")
     var result: Option[DataFrame] = None
     var outer = 0
     var nRem = remaining.count()
@@ -91,7 +89,10 @@ object Scc {
       // round costs a forward-min fixpoint PLUS a backward-flag
       // fixpoint (each O(depth) checkpointed jobs), so this removes
       // the whole job cascade at benchmark scale.
-      if (nRem <= cap && e.count() <= cap) {
+      if (LocalFinish.fits("Scc.components nodes", localFinishCap,
+            longIds)(nRem) &&
+          LocalFinish.fits("Scc.components edges", localFinishCap,
+            longIds)(e.count())) {
         // materialized: condensationLevels joins the assignment 3x
         val assigned = materialize(localTarjan(remaining, e))
         result = Some(result.fold(assigned)(r =>
@@ -148,24 +149,11 @@ object Scc {
       : DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    val tagged = nodes.select(lit(0).as("t"), col("id").as("x"),
-        lit(0L).as("y"))
-      .unionByName(e.select(lit(1).as("t"), col("src").as("x"),
-        col("dst").as("y")))
-    tagged.as[(Int, Long, Long)].repartition(1).mapPartitions { it =>
+    LocalGraph.rows(e.select("src", "dst"), nodes.select("id"))
+      .coalesce(1).mapPartitions { it =>
       import scala.collection.mutable
-      val idx = mutable.LongMap.empty[Int]
-      val ids = mutable.ArrayBuffer.empty[Long]
-      def ix(v: Long): Int = idx.getOrElseUpdate(v, {
-        ids += v; ids.length - 1
-      })
-      val adjM = mutable.HashMap.empty[Int, mutable.ArrayBuffer[Int]]
-      it.foreach {
-        case (0, n, _) => ix(n)
-        case (1, s, d) =>
-          adjM.getOrElseUpdate(ix(s), mutable.ArrayBuffer.empty) += ix(d)
-      }
-      val n = ids.length
+      val g = LocalGraph(it)
+      val n = g.n
       val index = Array.fill(n)(-1)
       val lowlink = new Array[Int](n)
       val onStack = new Array[Boolean](n)
@@ -173,7 +161,6 @@ object Scc {
       val stack = mutable.ArrayBuffer.empty[Int]
       var counter = 0
       var nScc = 0
-      val empty = mutable.ArrayBuffer.empty[Int]
       // iterative Tarjan: frames of (vertex, next-child position)
       val fv = mutable.ArrayBuffer.empty[Int]
       val fp = mutable.ArrayBuffer.empty[Int]
@@ -185,9 +172,8 @@ object Scc {
           stack += v0; onStack(v0) = true
           while (fv.nonEmpty) {
             val v = fv.last
-            val nbrs = adjM.getOrElse(v, empty)
-            if (fp.last < nbrs.length) {
-              val w = nbrs(fp.last)
+            if (fp.last < g.degree(v)) {
+              val w = g.nbr(g.off(v) + fp.last)
               fp(fp.length - 1) += 1
               if (index(w) == -1) {
                 fv += w; fp += 0
@@ -218,10 +204,10 @@ object Scc {
       val minOf = Array.fill(nScc)(Long.MaxValue)
       var i = 0
       while (i < n) {
-        if (ids(i) < minOf(sccOf(i))) minOf(sccOf(i)) = ids(i)
+        if (g.ids(i) < minOf(sccOf(i))) minOf(sccOf(i)) = g.ids(i)
         i += 1
       }
-      (0 until n).iterator.map(i => (ids(i), minOf(sccOf(i))))
+      (0 until n).iterator.map(i => (g.ids(i), minOf(sccOf(i))))
     }.toDF("id", "scc")
   }
 
@@ -243,7 +229,7 @@ object Scc {
   def condensationLevels(edges: DataFrame, assignment: DataFrame,
       maxIter: Int = 50,
       materialize: DataFrame => DataFrame = Iterate.cut,
-      localFinishCap: Long = 200000L)
+      localFinishCap: Long = LocalFinish.GraphEdges)
       : DataFrame = {
     val ce = materialize(edges
       .join(assignment.select(col("id").as("src"), col("scc").as("_sa")),
@@ -261,46 +247,30 @@ object Scc {
     // once the condensed edge list and component list fit one task,
     // instead of O(DAG depth) checkpointed join rounds. Components
     // with no condensed edge sit at level 0 in both formulations.
-    if (sizes.schema("scc").dataType ==
-          org.apache.spark.sql.types.LongType &&
-        localFinishCap > 0 && ce.count() <= localFinishCap &&
-        sizes.count() <= localFinishCap) {
+    val longIds = LocalFinish.longIds(sizes, "scc")
+    if (LocalFinish.fits("Scc.condensationLevels edges", localFinishCap,
+          longIds)(ce.count()) &&
+        LocalFinish.fits("Scc.condensationLevels components", localFinishCap,
+          longIds)(sizes.count())) {
       val spark = ce.sparkSession
       import spark.implicits._
-      val tagged = sizes.select(lit(0).as("t"), col("scc").as("x"),
-          lit(0L).as("y"))
-        .unionByName(ce.select(lit(1).as("t"), col("s").as("x"),
-          col("t").as("y")))
-      val lvlLocal = tagged.as[(Int, Long, Long)].repartition(1)
-        .mapPartitions { it =>
+      val lvlLocal = LocalGraph.rows(ce.select("s", "t"), sizes.select("scc"))
+        .coalesce(1).mapPartitions { it =>
           import scala.collection.mutable
-          val idx = mutable.LongMap.empty[Int]
-          val ids = mutable.ArrayBuffer.empty[Long]
-          def ix(v: Long): Int = idx.getOrElseUpdate(v, {
-            ids += v; ids.length - 1
-          })
-          val out = mutable.HashMap.empty[Int, mutable.ArrayBuffer[Int]]
-          val indeg = mutable.ArrayBuffer.empty[Int]
-          def grow(i: Int): Unit =
-            while (indeg.length <= i) indeg += 0
-          it.foreach {
-            case (0, c, _) => grow(ix(c))
-            case (1, s, d) =>
-              val is = ix(s); val id2 = ix(d); grow(math.max(is, id2))
-              out.getOrElseUpdate(is, mutable.ArrayBuffer.empty) += id2
-              indeg(id2) += 1
-          }
-          val n = ids.length
+          val g = LocalGraph(it)
+          val n = g.n
+          val indeg = new Array[Int](n)
+          g.dst.foreach(indeg(_) += 1)
           val lvl = new Array[Long](n)
           val queue = mutable.Queue.empty[Int]
           var i = 0
           while (i < n) { if (indeg(i) == 0) queue += i; i += 1 }
           var seen = 0
-          val empty = mutable.ArrayBuffer.empty[Int]
           while (queue.nonEmpty) {
             val v = queue.dequeue()
             seen += 1
-            out.getOrElse(v, empty).foreach { w =>
+            (g.off(v) until g.off(v + 1)).foreach { k =>
+              val w = g.nbr(k)
               if (lvl(v) + 1 > lvl(w)) lvl(w) = lvl(v) + 1
               indeg(w) -= 1
               if (indeg(w) == 0) queue += w
@@ -308,7 +278,7 @@ object Scc {
           }
           require(seen == n, "condensation levels: assignment is not " +
             "acyclic (not a valid SCC partition)")
-          (0 until n).iterator.map(i => (ids(i), lvl(i)))
+          (0 until n).iterator.map(i => (g.ids(i), lvl(i)))
         }.toDF("scc", "lvl")
       return sizes.join(lvlLocal, "scc")
         .select(col("scc"), col("n_nodes"), col("lvl").as("level"))

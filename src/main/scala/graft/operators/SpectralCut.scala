@@ -55,7 +55,7 @@ object SpectralCut {
     * endpoint id: (id, score_q on the ±scale grid, pos_side). */
   def bipartition(edges: DataFrame, loCol: String, hiCol: String,
       rounds: Int = 8, scale: Long = 1000000L,
-      localFinishCap: Long = 200000L): DataFrame = {
+      localFinishCap: Long = LocalFinish.GraphEdges): DataFrame = {
     require(rounds >= 1, s"rounds ($rounds) must be >= 1")
     val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val e = edges.select(col(loCol).as("a"), col(hiCol).as("b"))
@@ -68,10 +68,8 @@ object SpectralCut {
     // task replays the identical integer rounds (Long sums bounded by
     // 2|E|·scale ≤ 4·10¹¹ under the cap; Scala Long `/` ≡ Spark `div`
     // ≡ DuckDB `//`, toward zero). Distributed rounds unchanged above.
-    if (localFinishCap > 0 &&
-        sym.schema("a").dataType == org.apache.spark.sql.types.LongType &&
-        sym.schema("b").dataType == org.apache.spark.sql.types.LongType &&
-        sym.count() <= 2L * math.min(localFinishCap, Long.MaxValue / 2))
+    if (LocalFinish.fits("SpectralCut.bipartition", localFinishCap,
+        LocalFinish.longIds(sym, "a", "b"), symmetric = true)(sym.count()))
       return localBipartition(sym, rounds, scale)
     val deg = sym.groupBy(col("a").as("id")).agg(count(lit(1)).as("d"))
     // Start: deterministic ±scale by md5 parity — any engine replays
@@ -116,25 +114,15 @@ object SpectralCut {
       : DataFrame = {
     val spark = sym.sparkSession
     import spark.implicits._
-    val out = sym.as[(Long, Long)].coalesce(1).mapPartitions { it =>
-      val idx = scala.collection.mutable.LongMap.empty[Int]
-      val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val srcs = scala.collection.mutable.ArrayBuffer.empty[Int]
-      val dsts = scala.collection.mutable.ArrayBuffer.empty[Int]
-      it.foreach { case (a, b) =>
-        srcs += idx.getOrElseUpdate(a, { ids += a; ids.length - 1 })
-        dsts += idx.getOrElseUpdate(b, { ids += b; ids.length - 1 })
-      }
-      val n = ids.length
-      val nE = srcs.length
-      val d = new Array[Long](n)
-      var k = 0
-      while (k < nE) { d(srcs(k)) += 1; k += 1 }
+    val out = LocalGraph.rows(sym).coalesce(1).mapPartitions { it =>
+      val g = LocalGraph(it)
+      val n = g.n
+      val d = Array.tabulate(n)(g.degree(_).toLong)
       val md = java.security.MessageDigest.getInstance("MD5")
       val x = new Array[Long](n)
       var i = 0
       while (i < n) {
-        val dig = md.digest(s"spec|${ids(i)}"
+        val dig = md.digest(s"spec|${g.ids(i)}"
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
         x(i) = if (((dig(0) >> 4) & 0xf) % 2 == 0) scale else -scale
         md.reset()
@@ -158,14 +146,14 @@ object SpectralCut {
       var r = 1
       while (r <= rounds) {
         val sx = new Array[Long](n)
-        k = 0
-        while (k < nE) { sx(srcs(k)) += x(dsts(k)); k += 1 }
+        var k = 0
+        while (k < g.m) { sx(g.src(k)) += x(g.dst(k)); k += 1 }
         i = 0
         while (i < n) { x(i) = (x(i) + sx(i) / d(i)) / 2; i += 1 }
         normalize()
         r += 1
       }
-      (0 until n).iterator.map(i0 => (ids(i0), x(i0), x(i0) >= 0))
+      (0 until n).iterator.map(i0 => (g.ids(i0), x(i0), x(i0) >= 0))
     }
     out.toDF("id", "score_q", "pos_side")
   }

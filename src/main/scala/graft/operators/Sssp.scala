@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Weighted single-source(-set) shortest paths by synchronous
   * Bellman–Ford rounds (Bellman 1958) over an undirected weighted edge
@@ -46,27 +45,22 @@ object Sssp {
     * reachable within `rounds` relaxations, dist = exact integer
     * min-plus distance (seeds at 0).
     *
-    * `localFinishCap` is in INPUT-edge units (the symmetric table
-    * holds 2 rows per edge); 200k edges ≈ 9 MB of longs in-task.
-    * Cap 0 disables the local finisher (used by the spec to pin
-    * local == distributed).
+    * `localFinishCap`: 200k input edges ≈ 9 MB of longs in-task.
     */
   def distances(edges: DataFrame, srcCol: String, dstCol: String,
       costCol: String, seeds: DataFrame, rounds: Int,
-      localFinishCap: Long = 200000L): DataFrame = {
+      localFinishCap: Long = LocalFinish.GraphEdges): DataFrame = {
     require(rounds >= 0, s"rounds ($rounds) must be >= 0")
     val e = edges.select(col(srcCol).as("a"), col(dstCol).as("b"),
       col(costCol).cast("long").as("w"))
     val sym = e.unionAll(e.select(col("b").as("a"), col("a").as("b"),
         col("w")))
       .localCheckpoint(eager = true)
-    val longIds = sym.schema("a").dataType == LongType &&
-      seeds.schema.fields(0).dataType == LongType
-    val symCap =
-      if (localFinishCap > Long.MaxValue / 2) Long.MaxValue
-      else 2 * localFinishCap
-    if (localFinishCap > 0 && longIds && sym.count() <= symCap) {
-      val out = localDistances(sym, seeds, rounds)
+    if (LocalFinish.fits("Sssp.distances", localFinishCap,
+        LocalFinish.longIds(sym, "a") && LocalFinish.longIds(seeds, "n"),
+        symmetric = true)(sym.count())) {
+      // pinned: the replay reads sym, whose blocks are freed next
+      val out = localDistances(sym, seeds, rounds).localCheckpoint(eager = true)
       SuffixArray.freeCheckpoint(sym)
       return out
     }
@@ -94,39 +88,31 @@ object Sssp {
   private def localDistances(sym: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {
     val spark = sym.sparkSession
-    val tagged = sym.select(lit(1).as("t"), col("a").cast("long").as("x"),
-        col("b").cast("long").as("y"), col("w").cast("long").as("w"))
-      .unionByName(seeds.select(lit(0).as("t"),
-        col("n").cast("long").as("x"), lit(0L).as("y"), lit(0L).as("w")))
-    val out = tagged.repartition(1).rdd.mapPartitions { it =>
-      import scala.collection.mutable
-      val ea = mutable.ArrayBuffer.empty[Long]
-      val eb = mutable.ArrayBuffer.empty[Long]
-      val ew = mutable.ArrayBuffer.empty[Long]
-      var dist = mutable.LongMap.empty[Long]
-      it.foreach { r =>
-        require(!r.isNullAt(1), "Sssp: null node id")
-        if (r.getInt(0) == 0) dist(r.getLong(1)) = 0L
-        else { ea += r.getLong(1); eb += r.getLong(2); ew += r.getLong(3) }
-      }
-      val m = ea.length
+    import spark.implicits._
+    LocalGraph.rows(sym.select("a", "b", "w"), seeds.select("n"))
+      .coalesce(1).mapPartitions { it =>
+      val g = LocalGraph(it)
+      var reached = new Array[Boolean](g.n)
+      var dist = new Array[Long](g.n)
+      g.seeds.foreach(reached(_) = true)
       (1 to rounds).foreach { _ =>
         val next = dist.clone()
+        val nextReached = reached.clone()
         var i = 0
-        while (i < m) {
-          dist.get(ea(i)).foreach { da =>
-            val cand = da + ew(i)
-            val b = eb(i)
-            if (next.get(b).forall(cand < _)) next(b) = cand
+        while (i < g.m) {
+          val a = g.src(i); val b = g.dst(i)
+          if (reached(a)) {
+            val cand = dist(a) + g.weight(i)
+            if (!nextReached(b) || cand < next(b)) {
+              next(b) = cand; nextReached(b) = true
+            }
           }
           i += 1
         }
         dist = next
+        reached = nextReached
       }
-      dist.iterator.map { case (n, d) => org.apache.spark.sql.Row(n, d) }
-    }
-    spark.createDataFrame(out, StructType(Seq(
-      StructField("n", LongType, nullable = false),
-      StructField("dist", LongType, nullable = false))))
+      (0 until g.n).iterator.filter(reached(_)).map(v => (g.ids(v), dist(v)))
+    }.toDF("n", "dist")
   }
 }

@@ -230,18 +230,6 @@ object SuffixArray {
     (addOffsets(localRanked, adj), nDistinct, nRows)
   }
 
-  /** Two-regime cut-over (r15 local-finisher discipline, MST/CC/SCC
-    * precedent): when the whole corpus holds at most this many TOKENS,
-    * the suffix order and adjacent-LCP pairs are computed in ONE task
-    * instead of ⌈log₄ maxDocLen⌉ sort rounds + the multi-level LCP
-    * descent — at sf0.1 those are ~35 sub-second jobs whose cost is
-    * almost entirely scheduler/AQE round trips. 2M tokens is ≤ ~100 MB
-    * of task state (per-doc int arrays + the vocab) — comfortably
-    * inside one executor task; sf1's 2.6M-token corpus already takes
-    * the distributed regime, so the scale path stays exercised.
-    */
-  private val LocalFinishTokens = 2000000L
-
   /** (maxDocLen, totalTokens) in one job. */
   private def corpusSize(t: DataFrame): (Int, Long) = {
     val r = t.groupBy("doc").count()
@@ -260,12 +248,23 @@ object SuffixArray {
     * default collation, the pin the r15 ConnectedComponents finisher
     * established; suffix comparison is shorter-prefix-first, matching
     * the −1 past-end sentinel of the distributed rounds.
+    *
+    * Two-regime cut-over (r15 local-finisher discipline, MST/CC/SCC
+    * precedent): when the whole corpus holds at most
+    * [[LocalFinish.Tokens]] TOKENS, the suffix order and adjacent-LCP
+    * pairs are computed in ONE task instead of ⌈log₄ maxDocLen⌉ sort
+    * rounds + the multi-level LCP descent — at sf0.1 those are ~35
+    * sub-second jobs whose cost is almost entirely scheduler/AQE round
+    * trips. 2M tokens is ≤ ~100 MB of task state (per-doc int arrays +
+    * the vocab) — comfortably inside one executor task; sf1's
+    * 2.6M-token corpus already takes the distributed regime, so the
+    * scale path stays exercised.
     */
   private[operators] def localCombined(toks: Dataset[SaTok],
       minTokens: Int): DataFrame = {
     val spark = toks.sparkSession
     import spark.implicits._
-    toks.repartition(1).mapPartitions { it =>
+    toks.coalesce(1).mapPartitions { it =>
       val rows = it.toArray
       if (rows.isEmpty) Iterator.empty
       else {
@@ -370,15 +369,15 @@ object SuffixArray {
     * lcp ≥ `minTokens` guaranteed present; sub-threshold pairs may be
     * absent in either regime) plus a release hook to call once every
     * consumer has materialized. Chooses the one-task local regime under
-    * [[LocalFinishTokens]], the distributed rank rounds + descent above
+    * [[LocalFinish.Tokens]], the distributed rank rounds + descent above
     * it.
     */
   private[graft] def lcpPairs(docs: DataFrame, idCol: String,
       textCol: String, minTokens: Int,
-      localCap: Long = LocalFinishTokens): (DataFrame, () => Unit) = {
+      localCap: Long = LocalFinish.Tokens): (DataFrame, () => Unit) = {
     val t = tokens(docs, idCol, textCol)
     val (maxLen, total) = corpusSize(t)
-    if (total <= localCap) {
+    if (LocalFinish.fits("SuffixArray.lcpPairs", localCap)(total)) {
       val spark = docs.sparkSession
       import spark.implicits._
       val comb = localCombined(t.as[SaTok], minTokens)
@@ -798,7 +797,8 @@ object SuffixArray {
     // local regime: ranks from the one-task build (Int.MaxValue
     // threshold suppresses the pair rows — only kind=0 is consumed)
     val (fin, scratch): (DataFrame, Seq[DataFrame]) =
-      if (total <= LocalFinishTokens) {
+      if (LocalFinish.fits("SuffixArray.bwtRunStats",
+          LocalFinish.Tokens)(total)) {
         val comb = localCombined(toks.as[SaTok], Int.MaxValue)
         (comb.filter(col("kind") === 0).select("doc", "pos", "rank"),
           Seq(comb))

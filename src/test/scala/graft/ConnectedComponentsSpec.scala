@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.ConnectedComponents
+import graft.operators.{ConnectedComponents, LocalFinish}
 
 class ConnectedComponentsSpec extends SparkSpec {
   import spark.implicits._
@@ -165,5 +165,24 @@ class ConnectedComponentsSpec extends SparkSpec {
       .alternatingStars(dense, "a", "b", localFinishCap = 0L)
       .as[(Long, Long)].collect().toMap
     assert(got === want && got.nonEmpty)
+  }
+
+  test("null ids: the local finisher returns what the distributed rounds return") {
+    // the distributed equi-joins never match a null id: a null-endpoint
+    // edge merges nothing, its non-null endpoint is still a node, and
+    // the null node keeps its initial closed-neighborhood minimum
+    val edges = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), Some(3L)), (None, Some(5L)),
+      (Some(7L), None), (None, None), (Some(8L), Some(9L)))
+      .toDF("a", "b")
+    def run(cap: Long) = ConnectedComponents
+      .labelPropagation(edges, "a", "b", localFinishCap = cap)
+      .as[(Option[Long], Option[Long])].collect().toSet
+    val dist = run(0L)
+    assert(dist === Set(
+      (Some(1L), Some(1L)), (Some(2L), Some(1L)), (Some(3L), Some(1L)),
+      (Some(5L), Some(5L)), (Some(7L), Some(7L)), (None, Some(5L)),
+      (Some(8L), Some(8L)), (Some(9L), Some(8L))))
+    assert(run(LocalFinish.GraphEdges) === dist)
   }
 }

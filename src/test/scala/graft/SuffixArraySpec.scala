@@ -192,4 +192,14 @@ class SuffixArraySpec extends SparkSpec {
         s"local/distributed pairs diverge at minTokens=$minTokens")
     }
   }
+
+  test("lcpPairs: an empty corpus gives no pairs in either regime") {
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    for (cap <- Seq(0L, Long.MaxValue)) {
+      val (pairs, free) = SuffixArray.lcpPairs(empty, "doc_id", "text", 3,
+        localCap = cap)
+      assert(pairs.count() === 0, s"cap $cap")
+      free()
+    }
+  }
 }

@@ -70,4 +70,12 @@ class UnigramTokenizerSpec extends SparkSpec {
     assert(local.nonEmpty, "vacuous equivalence")
     assert(local === dist)
   }
+
+  test("empty corpus: both regimes agree, and cap 0 takes the distributed one") {
+    val empty = Seq.empty[String].toDF("text")
+    def fit(cap: Long) =
+      UnigramTokenizer.train(empty, "text", localCap = cap)
+        .as[(Int, String, Long, Long, Long)].collect().toSeq
+    assert(fit(0L) === fit(Long.MaxValue))
+  }
 }

@@ -33,6 +33,18 @@ import org.apache.spark.sql.SparkSession
   *    is the session bring-up only (~2–4 s per recycle).
   */
 object Bench {
+  /** `s` as a JSON string literal: quote, backslash and ALL control
+    * chars (< 0x20, as `\u00XX`) escaped. A raw tab or CR (in oracle
+    * SQL, say) would make `json.load` reject the whole file and silently
+    * zero a correctness check. */
+  def jstr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
   def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     val n = s.length
@@ -55,13 +67,6 @@ object Bench {
       s
     }
     var spark = newSession()
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
     def fmt(d: Double): String = f"$d%.3f"
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Measurement tooling (optimization guide §1.1/§7.1 — find where the
   * time goes before changing anything): run ONE query end-to-end under
@@ -8,6 +9,14 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * wall duration, stage/task counts, and the call site that launched
   * it. Iterative operators show up as long runs of small jobs; a
   * single dominant job points at one stage to read in the plan.
+  *
+  * A streaming replay (StreamSurface) also prints each micro-batch's
+  * StreamingQueryProgress `durationMs` as it lands, so per-trigger
+  * overhead (queryPlanning, walCommit, commitOffsets) is attributable
+  * separately from addBatch (the actual job + sink). r16 reading for
+  * stream_unattributed, warm rep: addBatch ~560 ms of the ~800 ms
+  * trigger — the job itself dominates; the driver-side per-trigger costs
+  * are ~230 ms combined.
   *
   * Usage: Profile <sfDir> <query> [reps]
   */
@@ -36,6 +45,15 @@ object Profile {
       override def onJobEnd(j: SparkListenerJobEnd): Unit = {
         val job = open.remove(j.jobId)
         if (job != null) done.add((job, System.nanoTime() - job.t0))
+      }
+    })
+
+    spark.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+        val p = e.progress
+        println(s"  batch ${p.batchId} rows=${p.numInputRows} durations=${p.durationMs}")
       }
     })
 

@@ -25,18 +25,6 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Oracle SQL may reference fixture/roundtrip paths keyed by the scale
     // factor under verification (e.g. /tmp/graft_k1_out/__SF__). Resolve
     // the placeholder HERE — Verify is the only component that knows which
@@ -45,14 +33,14 @@ object Verify {
     val sfName = new java.io.File(sfDir).getName
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => selected(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v.replace("__SF__", sfName))}" }
+      .map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v.replace("__SF__", sfName))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Names whose result must be non-empty at verify scale — consumed by
     // tools/check_oracle.py so a 0-row result that matches an equally
     // empty oracle fails loudly instead of passing vacuously.
     Files.writeString(Paths.get(s"$outDir/expect_nonempty.json"),
-      SparkEntry.expectNonEmpty.toSeq.sorted.map(q).mkString("[", ",", "]"))
+      SparkEntry.expectNonEmpty.toSeq.sorted.map(Bench.jstr).mkString("[", ",", "]"))
     spark.stop()
   }
 }

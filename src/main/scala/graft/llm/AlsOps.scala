@@ -67,7 +67,7 @@ object AlsOps {
     // cap the distributed alternations run unchanged (the 100 TB
     // path); AlsOpsSpec pins local == distributed on a real feed.
     if (LocalFinish.fits("AlsOps.alsFactors", localFinishCap,
-        LocalFinish.longIds(r, "u", "i"))(r.count()))
+        LocalFinish.longIds(r, "u", "i"))(LocalFinish.rows(r, "u", "i", "r")))
       return localAls(r, userCol, rounds, lambdaMilli2, topUsers)
     def h(prefix: String, c: Column, f: Int): Column =
       expr(s"cast(conv(substring(md5(concat('$prefix', " +
@@ -134,9 +134,8 @@ object AlsOps {
     val spark = r.sparkSession
     import spark.implicits._
     // the one-task idiom and its measured reason: see LocalFinish. The
-    // typed path decodes straight to primitive tuples; null ids fail
-    // loudly at decode (callers feed non-null keys — the query site
-    // filters)
+    // typed path decodes straight to primitive tuples; the gate sends
+    // null ids and ratings to the distributed regime (LocalFinish.rows)
     val out = r.as[(Long, Long, Long)].coalesce(1).mapPartitions { it =>
       import scala.collection.mutable
       val us = mutable.ArrayBuffer.empty[Long]

@@ -210,7 +210,7 @@ object TextOps {
     * near-identical boilerplate docs all landing on one (band, bkey) —
     * yields ~5·10⁷ candidates from that bucket alone, the one
     * adversarial input that defeats the "bucket sizes are bounded by
-    * true local similarity" reading (NearDupSkewBench measures it).
+    * true local similarity" reading (`ScaleBench neardup_skew` measures it).
     * `hotBandCap` bounds it the way X148 caps basket fan-out: buckets
     * with more than `cap` docs contribute STAR candidates (every doc
     * paired with the bucket's min doc) instead of all pairs — O(n) per
@@ -583,7 +583,7 @@ object TextOps {
     * n ≪ 2^(bits/chunks): at 60 bits / 4 chunks the keys are 15 bits, so
     * by ~10⁵ documents random hashes collide constantly and candidates
     * grow as n²/2^15 — quadratic, just with a small constant
-    * (NearDupScaleBench records the cliff empirically). This variant
+    * (`ScaleBench neardup_scale` records the cliff empirically). This variant
     * keys buckets on every (chunks − maxHamming)-sized SUBSET of chunks:
     * a pair within Hamming distance k ≤ maxHamming has its differing
     * bits inside at most k chunks, so some (chunks − k) chunks agree
@@ -3003,7 +3003,7 @@ object TextOps {
     * Width sizing (width ≤ 0 → auto = 8/support, floor 1024): the
     * sketch's shuffle is depth·width combine rows PER PARTITION, so an
     * oversized width silently re-creates the per-partition shuffle
-    * volume the sketch exists to remove (HeavyHittersBench measured a
+    * volume the sketch exists to remove (`ScaleBench heavy_hitters` measured a
     * 2^16-wide sketch shuffling MORE than the plain wordcount on a 6M-
     * word tail). 8/support keeps expected bucket mass at T/8 — candidate
     * false positives need a word to collide with a true heavy hitter in

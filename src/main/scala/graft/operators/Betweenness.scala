@@ -66,7 +66,7 @@ object Betweenness {
       symEdges.select(col(aCol).as("a"), col(bCol).as("b")))
     if (LocalFinish.fits("Betweenness.approx", localFinishCap,
         LocalFinish.longIds(sym, "a") && LocalFinish.longIds(sources, "n"),
-        symmetric = true)(sym.count()))
+        symmetric = true)(LocalFinish.rows(sym, "a", "b")))
       return localApprox(sym, sources, levels, topK)
     var vis = materialize(sources.select(col("n").as("src"), col("n"),
       lit(0).as("d"), lit(1L).as("sigma")))

@@ -28,7 +28,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * Cost model, stated honestly: the two branches each scan the probe
   * (columnar, pruned, no exchange) — two cheap scans replace one
   * full-corpus shuffle write+sort+read; the win is the shuffle-bytes
-  * factor, which [[graft.BloomJoinBench]] pins empirically. The filter
+  * factor, which [[graft.ScaleBench]] `bloom_anti_join` pins
+  * empirically. The filter
   * itself is built by ONE distributed aggregate over the base
   * (`stat.bloomFilter` — partial filters OR-merged, driver holds the
   * final ~1.2 bytes/key at 1% FPR) and is plan-embedded: sensible to

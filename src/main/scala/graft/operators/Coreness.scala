@@ -66,7 +66,7 @@ object Coreness {
     // (c_v ← H of neighbor multiset), so the fixpoint values match by
     // construction; CorenessSpec pins local == distributed.
     if (LocalFinish.fits("Coreness.decompose", localFinishCap,
-        LocalFinish.longIds(e, "a"))(e.count()))
+        LocalFinish.longIds(e, "a"))(LocalFinish.rows(e, "a", "b")))
       return localDecompose(e, maxRounds)
     val und = Iterate.cut(
       e.select(col("a").as("v"), col("b").as("u"))
@@ -139,7 +139,7 @@ object Coreness {
     * exact recurrence the distributed rounds run (c_v ← max over the
     * desc-sorted neighbor multiset of min(rank, value)), so the
     * converged values are identical by construction. Long ids,
-    * non-null (the projection feed guarantees both).
+    * non-null (the gate sends null ids to the distributed rounds).
     */
   private def localDecompose(e: DataFrame, maxRounds: Int): DataFrame = {
     val spark = e.sparkSession

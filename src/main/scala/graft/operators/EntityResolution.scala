@@ -76,7 +76,7 @@ object EntityResolution {
   /** The pre-confirm candidate pairs (one row per distinct segment-key
     * collision — a (probe, master) pair colliding on several keys
     * appears several times; the confirm step dedups). Exposed so the
-    * scale artifact (FuzzyJoinScaleBench) can measure candidate growth
+    * scale artifact (`ScaleBench fuzzy_join_growth`) can measure candidate growth
     * directly — the quantity the pigeonhole bounds.
     */
   def editDistance1Candidates(

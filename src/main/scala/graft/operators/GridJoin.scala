@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
   * representative lose their direct edge, and hot↔hot pairs across
   * DIFFERENT cells drop) — for the downstream CC/MST/linkage
   * consumers the star keeps every member CONNECTED to its cluster,
-  * which is the contract those consumers need (GridSkewBench measures
+  * which is the contract those consumers need (`ScaleBench grid_skew` measures
   * both the candidate bound and the preserved connectivity). The
   * default cap = unbounded is the exact classical semantics the
   * oracles replay.
@@ -68,7 +68,7 @@ object GridJoin {
 
   /** Candidate pairs PRE distance filter, each unordered pair exactly
     * once, as (id, x, y, id_b, xb, yb) — id/id_b NOT yet canonically
-    * ordered in the capped branches. Package-visible so GridSkewBench
+    * ordered in the capped branches. Package-visible so `ScaleBench grid_skew`
     * can measure the candidate bound directly (the bandCandidates
     * pattern). */
   private[graft] def candidatePairs(df: DataFrame, idCol: String,

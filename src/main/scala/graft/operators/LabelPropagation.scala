@@ -50,7 +50,8 @@ object LabelPropagation {
     // the identical round-r labels without 2 exchanges + checkpoint
     // per round. Gate: long ids + long weights, edge rows fit a task.
     if (LocalFinish.fits("LabelPropagation.communities", localFinishCap,
-        LocalFinish.longIds(sym, "n", "w"), symmetric = true)(sym.count())) {
+        LocalFinish.longIds(sym, "n", "w"), symmetric = true)(
+        LocalFinish.rows(sym, "n", "m", "w"))) {
       val spark = sym.sparkSession
       import spark.implicits._
       // materialized: consumers (e.g. modularity) join the label

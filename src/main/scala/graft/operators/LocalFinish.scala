@@ -35,13 +35,20 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   *    rows in AlsOps). Every replay is insensitive to input order.
   *  - null ids: the local regime returns what the distributed regime
   *    returns. The distributed equi-joins never match a null id, so the
-  *    ConnectedComponents and KCore replays drop what those joins drop;
-  *    [[LocalGraph]] replays decode ids as primitive longs, so a null id
-  *    fails the task loudly rather than returning a different answer.
+  *    ConnectedComponents and KCore replays drop what those joins drop.
+  *    [[LocalGraph]] and typed-tuple replays decode ids (and weights) as
+  *    primitive longs, which cannot hold a null, so their gates count
+  *    through [[rows]]: an input with a null in a decoded column takes
+  *    the distributed regime whatever the cap. The null check rides in
+  *    the counting aggregate, so it adds no Spark job. GraphColoring,
+  *    KTruss and Mst drop null-id edges before their gates (canonical
+  *    `lo < hi` edges, triangle support ≥ 1), so they count plainly.
+  *    The seed relations of Sssp, Betweenness and NeighborhoodFunction
+  *    are not counted, so a null SEED id still fails the replay task.
   *
   * Every decision logs one INFO line on the `graft.localfinish` logger
-  * (operator, rows counted, the cap it compared against, regime);
-  * logging adds no Spark job.
+  * (operator, rows counted or `null-ids`, the cap it compared against,
+  * regime); logging adds no Spark job.
   */
 object LocalFinish {
 
@@ -62,16 +69,31 @@ object LocalFinish {
 
   /** True when the replay should run: `cap` > 0, `supported` ids, and
     * `rows` (evaluated only then) ≤ cap, or ≤ 2 × cap for a
-    * `symmetric` edge list. */
+    * `symmetric` edge list. A `rows` of [[NullIds]] is never local,
+    * not even under a cap clamped at `Long.MaxValue`. */
   def fits(op: String, cap: Long, supported: Boolean = true,
       symmetric: Boolean = false)(rows: => Long): Boolean = {
     val limit = if (!symmetric) cap
       else if (cap > Long.MaxValue / 2) Long.MaxValue else 2 * cap
     val n = if (cap > 0 && supported) Some(rows) else None
-    val local = n.exists(_ <= limit)
-    log.info(s"$op: rows=${n.fold("uncounted")(_.toString)} cap=$limit " +
+    val local = n.exists(r => r >= 0 && r <= limit)
+    val counted = n.fold("uncounted")(r => if (r == NullIds) "null-ids" else r.toString)
+    log.info(s"$op: rows=$counted cap=$limit " +
       s"regime=${if (local) "local" else "distributed"}")
     local
+  }
+
+  /** The count [[rows]] reports for an input with a null id. */
+  val NullIds = -1L
+
+  /** The row count of `df` for [[fits]], or [[NullIds]] when any of
+    * `decoded` (the columns the replay decodes as primitive longs)
+    * holds a null. One aggregate: the same single job as `df.count()`. */
+  def rows(df: DataFrame, decoded: String*): Long = {
+    val r = df.agg(count(lit(1)),
+        bool_or(decoded.map(col(_).isNull).reduce(_ || _)))
+      .collect()(0)
+    if (!r.isNullAt(1) && r.getBoolean(1)) NullIds else r.getLong(0)
   }
 
   /** Every column of `df` in `cols` holds long ids. */

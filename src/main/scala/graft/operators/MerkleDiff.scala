@@ -76,7 +76,7 @@ object MerkleDiff {
   /** One-shot diff of two raw tables. Each side is digested ONCE into a
     * checkpointed projection reused by both the bucket summary and the
     * drill-down — without this the two-branch plan re-scans and
-    * re-hashes everything for the drill-down (MerkleScaleBench caught
+    * re-hashes everything for the drill-down (`ScaleBench merkle_diff` caught
     * it: 4 scans lost to the brute-force diff's 2 on wall-clock even
     * with a 7× shuffle cut). When digest tables are already maintained
     * (the steady-state protocol), call [[diffDigested]] on them

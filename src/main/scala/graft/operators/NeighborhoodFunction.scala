@@ -50,7 +50,7 @@ object NeighborhoodFunction {
     val counts: DataFrame =
       if (LocalFinish.fits("NeighborhoodFunction.sample", localFinishCap,
           LocalFinish.longIds(e, "_a") && LocalFinish.longIds(seeds, seedCol),
-          symmetric = true)(e.count()))
+          symmetric = true)(LocalFinish.rows(e, "_a", "_b")))
         localCounts(e, seeds, seedCol, maxHops)
       else {
         var frontier = seeds.select(col(seedCol).as("src")).distinct()

@@ -28,7 +28,7 @@ import graft.llm.TextOps
   * eigenvector per round is 1/λ₂(within), and geometric proximity
   * graphs mix SLOWLY (tiny gap), so 8 rounds land on a smooth
   * low-frequency cut rather than the global optimum —
-  * SpectralScaleBench measures it: conductance 0.161 vs 0.513 for a
+  * `ScaleBench spectral_scale` measures it: conductance 0.161 vs 0.513 for a
   * random balanced cut on the 2× graph (3.2× better), while the
   * planted zero-conductance component split itself would need
   * O(1/gap) rounds (twin purity 0.555 recorded, not hidden).
@@ -69,7 +69,8 @@ object SpectralCut {
     // 2|E|·scale ≤ 4·10¹¹ under the cap; Scala Long `/` ≡ Spark `div`
     // ≡ DuckDB `//`, toward zero). Distributed rounds unchanged above.
     if (LocalFinish.fits("SpectralCut.bipartition", localFinishCap,
-        LocalFinish.longIds(sym, "a", "b"), symmetric = true)(sym.count()))
+        LocalFinish.longIds(sym, "a", "b"), symmetric = true)(
+        LocalFinish.rows(sym, "a", "b")))
       return localBipartition(sym, rounds, scale)
     val deg = sym.groupBy(col("a").as("id")).agg(count(lit(1)).as("d"))
     // Start: deterministic ±scale by md5 parity — any engine replays

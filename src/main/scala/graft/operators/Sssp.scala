@@ -58,7 +58,7 @@ object Sssp {
       .localCheckpoint(eager = true)
     if (LocalFinish.fits("Sssp.distances", localFinishCap,
         LocalFinish.longIds(sym, "a") && LocalFinish.longIds(seeds, "n"),
-        symmetric = true)(sym.count())) {
+        symmetric = true)(LocalFinish.rows(sym, "a", "b", "w"))) {
       // pinned: the replay reads sym, whose blocks are freed next
       val out = localDistances(sym, seeds, rounds).localCheckpoint(eager = true)
       SuffixArray.freeCheckpoint(sym)
@@ -83,7 +83,8 @@ object Sssp {
   /** One-task synchronous Bellman–Ford: exactly `rounds` min-plus
     * relaxation rounds over the in-memory symmetric edge list — the
     * same round-limited (NOT fixpoint) semantics as the distributed
-    * loop, so surplus-round behavior matches too. Long ids, non-null.
+    * loop, so surplus-round behavior matches too. Long ids; the gate
+    * sends null edge ids or costs to the distributed rounds.
     */
   private def localDistances(sym: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {

@@ -502,7 +502,7 @@ object SuffixArray {
     * Returns a MATERIALIZED (doc_a, pos_a, doc_b, pos_b, len_a, len_b,
     * lcp) frame where (a, b) are consecutive suffixes in SA order; all
     * scratch beneath it is freed before returning, so a caller sharing
-    * one build across several outputs (SuffixScaleBench, the
+    * one build across several outputs (`ScaleBench suffix_scale`, the
     * llm_suffix_shared composite) holds exactly `tables` + this frame.
     *
     * - SA order = final rank, ties (exactly-equal suffixes) broken by

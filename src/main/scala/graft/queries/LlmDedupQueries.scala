@@ -343,7 +343,7 @@ private[queries] object LlmDedupQueries {
     // web-scale blocking: buckets keyed on 3-of-6 chunk subsets (30-bit
     // keys, 20 tables) instead of single 15-bit chunks, so random
     // collisions stay ~n²/2^30 instead of n²/2^15 — the configuration
-    // that holds past ~10⁵ docs (NearDupScaleBench records the
+    // that holds past ~10⁵ docs (`ScaleBench neardup_scale` records the
     // single-chunk cliff). The oracle here is BRUTE-FORCE all-pairs
     // Hamming — losslessness of the subset blocking proven against
     // ground truth cross-engine, not against another blocking scheme.

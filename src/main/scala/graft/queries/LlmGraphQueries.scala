@@ -151,7 +151,7 @@ private[queries] object LlmGraphQueries {
     // and suffix-array incremental forms: each NEW vector (the held-out
     // tenth) beam-searches the BASE graph and its top-6 beam results
     // become its out-edges — per-insert cost is the beam search, which
-    // GraphAnnScaleBench measured flat in corpus size (the DiskANN
+    // `ScaleBench graph_ann_scale` measured flat in corpus size (the DiskANN
     // insert argument; the back-edge RobustPrune pass is the documented
     // omission — degree bounds are re-established by periodic rebuild,
     // this emits the forward adjacency a real insert writes first).

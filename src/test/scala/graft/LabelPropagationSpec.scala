@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.LabelPropagation
+import graft.operators.{LabelPropagation, LocalFinish}
 
 /** LPA: two dense cliques bridged by one weak edge must come out as TWO
   * communities (the refinement CC cannot give — CC merges them), and
@@ -57,5 +57,18 @@ class LabelPropagationSpec extends SparkSpec {
         .collect().map(x => (x.getLong(0), x.getLong(1))).toMap
       assert(viaLocal === viaDist, s"divergence at rounds=$r")
     }
+  }
+
+  test("a null id takes the distributed regime under every cap") {
+    // the one-task replay decodes ids as primitive longs, so only the
+    // distributed rounds can answer this input, whatever the cap
+    val edges = Seq((Some(1L), 2L, 1L), (None, 2L, 1L)).toDF("a", "b", "w")
+    def run(cap: Long) = LabelPropagation
+      .communities(edges, "a", "b", "w", rounds = 3, localFinishCap = cap)
+      .collect().map(x => (Option(x.get(0)), x.getLong(1))).toSet
+    val viaDist = run(0L)
+    assert(viaDist.size === 3 && viaDist.exists(_._1.isEmpty))
+    assert(run(LocalFinish.GraphEdges) === viaDist)
+    assert(run(Long.MaxValue) === viaDist)
   }
 }

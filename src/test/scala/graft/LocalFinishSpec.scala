@@ -7,9 +7,10 @@ import org.apache.logging.log4j.core.config.Property
 
 import graft.operators.{LocalFinish, LocalGraph}
 
-/** The shared two-regime gate: cap boundaries, the ×2 clamp, cap 0 and
-  * unsupported ids running no Spark job, the decision log line, and
-  * the CSR layout of the replays' graph.
+/** The shared two-regime gate: cap boundaries, the ×2 clamp, null ids
+  * forcing the distributed regime, cap 0 and unsupported ids running no
+  * Spark job, the decision log line, and the CSR layout of the replays'
+  * graph.
   */
 class LocalFinishSpec extends SparkSpec {
   import spark.implicits._
@@ -30,6 +31,17 @@ class LocalFinishSpec extends SparkSpec {
     assert(LocalFinish.fits("t", Long.MaxValue, symmetric = true)(10L))
     assert(LocalFinish.fits("t", Long.MaxValue / 2 + 1, symmetric = true)(10L))
     assert(LocalFinish.fits("t", Long.MaxValue)(Long.MaxValue))
+  }
+
+  test("rows reports a null in a decoded column; null-id inputs never run local") {
+    val df = Seq((Some(1L), 2L), (None, 3L)).toDF("a", "b")
+    assert(LocalFinish.rows(df, "b") === 2L)
+    assert(LocalFinish.rows(df, "a", "b") === LocalFinish.NullIds)
+    assert(LocalFinish.rows(df.filter($"a".isNotNull), "a", "b") === 1L)
+    assert(LocalFinish.rows(df.filter($"b" < 0), "a") === 0L)
+    // not even under the clamped doubled cap, where Long.MaxValue ≤ cap
+    assert(!LocalFinish.fits("t", Long.MaxValue, symmetric = true)(LocalFinish.NullIds))
+    assert(!LocalFinish.fits("t", Long.MaxValue)(LocalFinish.NullIds))
   }
 
   test("cap <= 0 and unsupported ids never count and run no Spark job") {
@@ -74,6 +86,7 @@ class LocalFinishSpec extends SparkSpec {
       LocalFinish.fits("Op.a", 5L, symmetric = true)(7L)
       LocalFinish.fits("Op.b", 5L)(7L)
       LocalFinish.fits("Op.c", 0L)(7L)
+      LocalFinish.fits("Op.d", 5L)(LocalFinish.NullIds)
     } finally {
       logger.removeAppender(appender)
       logger.setLevel(level)
@@ -82,7 +95,8 @@ class LocalFinishSpec extends SparkSpec {
     assert(lines.toSeq === Seq(
       "Op.a: rows=7 cap=10 regime=local",
       "Op.b: rows=7 cap=5 regime=distributed",
-      "Op.c: rows=uncounted cap=0 regime=distributed"))
+      "Op.c: rows=uncounted cap=0 regime=distributed",
+      "Op.d: rows=null-ids cap=5 regime=distributed"))
   }
 
   test("LocalGraph: dense ids, CSR slots both ways, seeds kept in order") {

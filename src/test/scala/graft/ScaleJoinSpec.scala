@@ -84,7 +84,7 @@ class ScaleJoinSpec extends SparkSpec {
     // all in ONE partition — the straggler task that holds the stage at
     // 100 TB. Salting spreads the hot key over r partitions; this checks
     // the mechanism by row counts, with no flaky wall-clock assertion
-    // (SkewBench is the timing artifact).
+    // (`ScaleBench skew_join` is the timing artifact).
     val r = 16
     val big = spark.range(100000).select(
       when(col("id") % 10 === 0, (col("id") % 100) + 1).otherwise(lit(0L)).as("k"),

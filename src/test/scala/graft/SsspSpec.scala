@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Sssp
+import graft.operators.{LocalFinish, Sssp}
 
 /** Hand-checked semantics for X270 weighted SSSP — min-plus vs hop
   * count, multi-seed minima, surplus-round idempotence, and the
@@ -59,5 +59,18 @@ class SsspSpec extends SparkSpec {
         .as[(Long, Long)].collect().toMap
       assert(loc === dist, s"rounds=$rounds")
     }
+  }
+
+  test("a null edge id takes the distributed regime under every cap") {
+    // the distributed rounds reach the null endpoint through edge
+    // (2, null); the one-task replay cannot decode it
+    val edges = Seq((Some(1L), 2L, 1L), (None, 2L, 1L)).toDF("a", "b", "cost")
+    def run(cap: Long) = Sssp.distances(edges, "a", "b", "cost",
+        Seq(1L).toDF("n"), rounds = 3, localFinishCap = cap)
+      .collect().map(x => (Option(x.get(0)), x.getLong(1))).toSet
+    val viaDist = run(0L)
+    assert(viaDist === Set((Some(1L), 0L), (Some(2L), 1L), (None, 2L)))
+    assert(run(LocalFinish.GraphEdges) === viaDist)
+    assert(run(Long.MaxValue) === viaDist)
   }
 }

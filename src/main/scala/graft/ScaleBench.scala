@@ -574,27 +574,18 @@ object ScaleBench {
         if (blocked) TextOps.hammingNearDupPairsBlocked(h, "doc_id", "simhash", 3, 6, 60)
         else TextOps.hammingNearDupPairs(h, "doc_id", "simhash", 3, 4, 60)
       val (sec, pairs) = time(run.count())
-      // candidate instrumentation: the same bucket join the operator
-      // runs, WITHOUT the distinct+verify — the row count whose growth
-      // rate is the structural claim (mirrors hammingNearDupPairs[Blocked])
-      val chunkBits = if (blocked) 10 else 15
-      val subsets =
-        if (blocked) (0 until 6).combinations(3).toSeq
-        else (0 until 4).map(Seq(_))
-      val keyStructs = subsets.zipWithIndex.map { case (ss, si) =>
-        val packed = ss.zipWithIndex.map { case (c, pos) =>
-          shiftleft(shiftright(col("simhash"), c * chunkBits)
-            .bitwiseAND(lit((1L << chunkBits) - 1)), pos * chunkBits)
-        }.reduce(_ + _)
-        struct(lit(si).as("ki"), packed.as("kv"))
-      }
-      val keyed = h.select(col("doc_id").as("doc"),
-        explode(array(keyStructs: _*)).as("k"))
-        .select(col("doc"), col("k.ki").as("ki"), col("k.kv").as("kv"))
-      val cands = keyed.select(col("ki"), col("kv"), col("doc").as("doc_a"))
-        .join(keyed.select(col("ki"), col("kv"), col("doc").as("doc_b")), Seq("ki", "kv"))
-        .filter(col("doc_a") < col("doc_b"))
-        .count()
+      // candidate instrumentation: the rows of the bucket self-join the
+      // operator runs, before its distinct+verify — the row count whose
+      // growth rate is the structural claim. A bucket of b docs joins
+      // into b(b-1)/2 of them (each doc holds one key per subset), so
+      // the bucket sizes give the count without running the join.
+      val (chunks, subsetSize) = if (blocked) (6, 3) else (4, 1)
+      val cands = h
+        .select(inline(TextOps.pigeonholeKeys(col("simhash"), chunks, 60,
+          subsetSize)))
+        .groupBy("ki", "kv").count()
+        .agg(expr("sum(count * (count - 1) div 2)"))
+        .collect()(0).getLong(0)
       h.unpersist()
       (sec, pairs, cands)
     }
@@ -662,9 +653,9 @@ object ScaleBench {
     val bands = TextOps.bandRowsForTest(docs, "doc_id", "text")
 
     val (tUncapped, nUncapped) =
-      time(TextOps.bandCandidates(bands).count())
+      time(TextOps.bucketPairs(bands, TextOps.BandKey).count())
     val (tCapped, nCapped) =
-      time(TextOps.bandCandidates(bands, hotBandCap = 64).count())
+      time(TextOps.bucketPairs(bands, TextOps.BandKey, hotCap = 64).count())
 
     // detection contract under the cap: every hot doc near-dups the rep
     val (tPairs, pairs) = time(
@@ -887,6 +878,9 @@ object ScaleBench {
     *    (size law, checked not assumed);
     *  - the incremental path's probe edge count grows with the BATCH,
     *    not the corpus (X313's linearity).
+    * Both graphs (51k and 103k edges) fit under `LocalFinish.GraphEdges`,
+    * so the scenario passes `localFinishCap = 0`: it times the
+    * distributed rounds it claims, not the one-task replay.
     */
   private def mstScale(spark: SparkSession): Unit = {
     val (pts1, pts2) = planarPoints(spark)
@@ -907,7 +901,7 @@ object ScaleBench {
       }
       val (t, f) = time {
         val fr = Mst.boruvka(prox, "id_a", "id_b",
-          "dist2", materialize = counter)
+          "dist2", materialize = counter, localFinishCap = 0L)
         fr.count()
       }
       // materialize sites per round: minE, f, >=1 jump, e — derive the
@@ -941,6 +935,8 @@ object ScaleBench {
     *    the sparsest cut (zero crossing edges), so side assignment
     *    should align almost perfectly with the twin flag — a
     *    correctness-at-scale readout, not just a timing.
+    * As in [[mstScale]], `localFinishCap = 0` keeps both graphs on the
+    * distributed rounds.
     */
   private def spectralScale(spark: SparkSession): Unit = {
     val (pts1, pts2) = planarPoints(spark)
@@ -955,7 +951,7 @@ object ScaleBench {
       val nE = prox.count()
       val (t, cut) = time {
         val c = SpectralCut
-          .bipartition(prox, "id_a", "id_b", rounds = 8)
+          .bipartition(prox, "id_a", "id_b", rounds = 8, localFinishCap = 0L)
           .localCheckpoint(true)
         c.count()
         c
@@ -996,7 +992,7 @@ object ScaleBench {
       else cross * 1000000L / math.min(volA, volB)
     }
     val cut8 = SpectralCut
-      .bipartition(prox2, "id_a", "id_b", rounds = 8)
+      .bipartition(prox2, "id_a", "id_b", rounds = 8, localFinishCap = 0L)
       .select(col("id"), col("pos_side").as("s")).localCheckpoint(true)
     val rand = cut8.select(col("id"),
       (conv(substring(md5(concat(lit("rnd|"),

@@ -200,59 +200,67 @@ object TextOps {
       minhashState(df, idCol, textCol, shingleN, numBands * rowsPerBand,
         repartitionInput))
     val bands = bandRows(perDoc, numBands, rowsPerBand)
-    verifyJaccard(bandCandidates(bands, hotBandCap), perDoc, perDoc,
-      threshold)
+    verifyJaccard(bucketPairs(bands, BandKey, hotCap = hotBandCap),
+      perDoc, perDoc, threshold)
   }
 
-  /** Candidate (doc_a, doc_b) pairs from banded (doc, band, bkey) rows.
+  /** The bucket key of [[bandRows]]. */
+  private[graft] val BandKey = Seq("band", "bkey")
+
+  /** Distinct candidate pairs from the equal-key bucket self-join every
+    * near-duplicate generator runs: rows of `keyed` (a `doc` column, the
+    * `keyCols` bucket key and the `carry` columns) pair with every other
+    * row of their bucket. Returns (doc_a, doc_b, then `<c>_a`, `<c>_b` for
+    * each carried column `c`) with doc_a < doc_b, once per pair however
+    * many buckets it shares.
     *
-    * The self-join is quadratic PER BUCKET: a hot band key — 10⁴
-    * near-identical boilerplate docs all landing on one (band, bkey) —
-    * yields ~5·10⁷ candidates from that bucket alone, the one
-    * adversarial input that defeats the "bucket sizes are bounded by
-    * true local similarity" reading (`ScaleBench neardup_skew` measures it).
-    * `hotBandCap` bounds it the way X148 caps basket fan-out: buckets
-    * with more than `cap` docs contribute STAR candidates (every doc
-    * paired with the bucket's min doc) instead of all pairs — O(n) per
-    * hot bucket instead of O(n²), and for the near-identical cluster
-    * the cap targets, every member still verifies against the
-    * representative, so duplicate DETECTION (the downstream CC/grouping
-    * input) is preserved; what's traded away is the full pair LIST
-    * inside oversized buckets (pairs joined only through a hot bucket
-    * and dissimilar to its representative can drop). Cold buckets are
-    * untouched, so the default cap = unbounded is the exact classical
-    * semantics the oracle replays.
+    * The self-join is quadratic PER BUCKET: a hot key — 10⁴
+    * near-identical boilerplate docs all landing on one bucket — yields
+    * ~5·10⁷ candidates from that bucket alone, the one adversarial input
+    * that defeats the "bucket sizes are bounded by true local
+    * similarity" reading (`ScaleBench neardup_skew` measures it).
+    * `hotCap` bounds it the way X148 caps basket fan-out: buckets with
+    * more than `hotCap` docs contribute STAR candidates (every doc paired
+    * with the bucket's min doc, whose carried columns come along)
+    * instead of all pairs — O(n) per hot bucket instead of O(n²). For
+    * the near-identical cluster the cap targets, every member still
+    * verifies against the representative, so duplicate DETECTION (the
+    * downstream CC/grouping input) is preserved; what's traded away is
+    * the full pair LIST inside oversized buckets (pairs joined only
+    * through a hot bucket and dissimilar to its representative can
+    * drop). Cold buckets are untouched, so the default cap = unbounded
+    * is the exact classical semantics the oracles replay.
+    *
+    * Under a finite cap `keyed` is pinned: it feeds the one combine agg
+    * that sizes every bucket and names its representative, the size
+    * join, and both pair arms — unpinned, the hash pipeline upstream
+    * (minhash state, simhash shingling, image decode) recomputes once
+    * per consumer (measured 2.6x on dedup_coverage at sf0.1).
     */
-  private[graft] def bandCandidates(bands: DataFrame,
-      hotBandCap: Int = Int.MaxValue): DataFrame = {
-    if (hotBandCap == Int.MaxValue) {
-      bands.select(col("band"), col("bkey"), col("doc").as("doc_a"))
-        .join(bands.select(col("band"), col("bkey"), col("doc").as("doc_b")),
-          Seq("band", "bkey"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    } else {
-      // one combine agg sizes every bucket and names its representative;
-      // the band table feeds the stats agg AND the size join AND both
-      // pair arms — pin it, or the minhash state upstream recomputes
-      // once per consumer (measured 2.6x on dedup_coverage at sf0.1)
-      val pinned = bands.localCheckpoint(true)
-      val stats = pinned.groupBy("band", "bkey")
-        .agg(count(lit(1)).as("_bn"), min("doc").as("_rep"))
-      val sized = pinned.join(stats, Seq("band", "bkey"))
-      val cold = sized.filter(col("_bn") <= hotBandCap)
-      val coldPairs = cold
-        .select(col("band"), col("bkey"), col("doc").as("doc_a"))
-        .join(cold.select(col("band"), col("bkey"), col("doc").as("doc_b")),
-          Seq("band", "bkey"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select("doc_a", "doc_b")
+  private[graft] def bucketPairs(keyed: DataFrame, keyCols: Seq[String],
+      carry: Seq[String] = Nil, hotCap: Int = Int.MaxValue): DataFrame = {
+    val out = Seq("doc_a", "doc_b") ++
+      carry.flatMap(c => Seq(s"${c}_a", s"${c}_b"))
+    def arm(df: DataFrame, s: String) = df.select(keyCols.map(col) ++
+      (col("doc").as(s"doc_$s") +: carry.map(c => col(c).as(s"${c}_$s"))): _*)
+    def allPairs(df: DataFrame) = arm(df, "a").join(arm(df, "b"), keyCols)
+      .filter(col("doc_a") < col("doc_b"))
+      .select(out.map(col): _*)
+    if (hotCap == Int.MaxValue) allPairs(keyed).distinct()
+    else {
+      val pinned = keyed.localCheckpoint(true)
+      val stats = pinned.groupBy(keyCols.map(col): _*)
+        .agg(count(lit(1)).as("_bn"), min("doc").as("_rep") +:
+          carry.map(c => min_by(col(c), col("doc")).as(s"_rep_$c")): _*)
+      val sized = pinned.join(stats, keyCols)
       // star: rep = bucket min, so (rep, doc) is already canonical
-      val hotPairs = sized
-        .filter(col("_bn") > hotBandCap && col("doc") =!= col("_rep"))
-        .select(col("_rep").as("doc_a"), col("doc").as("doc_b"))
-      coldPairs.unionByName(hotPairs).distinct()
+      val star = sized
+        .filter(col("_bn") > hotCap && col("doc") =!= col("_rep"))
+        .select(col("_rep").as("doc_a") +: col("doc").as("doc_b") +:
+          carry.flatMap(c => Seq(col(s"_rep_$c").as(s"${c}_a"),
+            col(c).as(s"${c}_b"))): _*)
+      allPairs(sized.filter(col("_bn") <= hotCap)).unionByName(star)
+        .distinct()
     }
   }
 
@@ -344,8 +352,7 @@ object TextOps {
     val cand = bandRows(pa, numBands, rowsPerBand)
       .select(col("band"), col("bkey"), col("doc").as("doc_a"))
       .join(bandRows(pb, numBands, rowsPerBand)
-        .select(col("band"), col("bkey"), col("doc").as("doc_b")),
-        Seq("band", "bkey"))
+        .select(col("band"), col("bkey"), col("doc").as("doc_b")), BandKey)
       .select("doc_a", "doc_b")
       .distinct()
     verifyJaccard(cand, pa, pb, threshold)
@@ -446,77 +453,72 @@ object TextOps {
     hammingNearDupPairs(simHash(df, idCol, textCol), idCol, "simhash",
       maxHamming, chunks, bits, hotBucketCap)
 
+  /** Pigeonhole bucket keys of a `bits`-bit hash split into `chunks`
+    * equal chunks: one (ki, kv) struct per `subsetSize`-sized subset of
+    * the chunks, ki the subset's index and kv its chunk values packed
+    * side by side into one LONG (positional shifts), so the join key
+    * stays fixed-width integer, never a string concat. Two hashes agree
+    * on a key exactly when they agree on every chunk of its subset.
+    * `subsetSize = 1` is the single-chunk scheme, (chunk index, chunk
+    * value); `chunks − maxHamming` is the combinatorial one
+    * ([[hammingNearDupPairsBlocked]]). Works for the full 64 bits —
+    * arithmetic shift-right sign-extension is masked off per chunk.
+    */
+  private[graft] def pigeonholeKeys(hashCol: Column, chunks: Int, bits: Int,
+      subsetSize: Int): Column = {
+    require(bits % chunks == 0, s"$bits bits must split evenly into $chunks chunks")
+    val chunkBits = bits / chunks
+    val mask = (1L << chunkBits) - 1
+    val subsets = (0 until chunks).combinations(subsetSize).toSeq
+    array(subsets.zipWithIndex.map { case (ss, si) =>
+      val packed = ss.zipWithIndex.map { case (c, pos) =>
+        shiftleft(shiftright(hashCol, c * chunkBits).bitwiseAND(lit(mask)),
+          pos * chunkBits)
+      }.reduce(_ + _)
+      struct(lit(si).as("ki"), packed.as("kv"))
+    }: _*)
+  }
+
+  /** (doc, sim, ki, kv) rows: every doc of `hashed` once per
+    * [[pigeonholeKeys]] bucket, carrying its hash as `sim`. */
+  private def pigeonholeRows(hashed: DataFrame, idCol: String,
+      hashCol: String, chunks: Int, bits: Int, subsetSize: Int): DataFrame =
+    hashed.select(col(idCol).as("doc"), col(hashCol).as("sim"),
+      inline(pigeonholeKeys(col(hashCol), chunks, bits, subsetSize)))
+
+  /** The pigeonhole key of [[pigeonholeRows]]. */
+  private val PigeonholeKey = Seq("ki", "kv")
+
+  /** Exact Hamming verify of (doc_a, doc_b, sim_a, sim_b) candidates. */
+  private def verifyHamming(cands: DataFrame, maxHamming: Int): DataFrame =
+    cands
+      .withColumn("hamming", hamming(col("sim_a"), col("sim_b")))
+      .filter(col("hamming") <= maxHamming)
+      .select("doc_a", "doc_b", "hamming")
+
   /** Pigeonhole-blocked near-dup pairs over ANY per-doc integer hash
     * column (SimHash, block-mean perceptual hash, …): two hashes within
     * Hamming distance k < chunks must agree exactly on ≥1 of `chunks`
     * equal bit-chunks, so candidates come from an equi-join on
     * (chunk index, chunk value) and all-pairs is rejected by
-    * construction. Works for the full 64 bits — arithmetic shift-right
-    * sign-extension is masked off per chunk.
+    * construction. Works for the full 64 bits.
+    *
+    * Chunk buckets are the simhash analog of LSH band buckets, and on a
+    * corpus with heavily correlated content (the r13 sf1 sweep measured
+    * 18x growth at 10x data through dedup_coverage's loose parameters) a
+    * hot (chunk, value) bucket goes quadratic exactly like a hot band.
+    * `hotBucketCap` applies the [[bucketPairs]] star cap; every star
+    * member is still Hamming-verified against the representative.
     */
   def hammingNearDupPairs(hashed: DataFrame, idCol: String, hashCol: String,
       maxHamming: Int, chunks: Int, bits: Int,
       hotBucketCap: Int = Int.MaxValue): DataFrame = {
     require(chunks > maxHamming,
       s"pigeonhole needs chunks ($chunks) > maxHamming ($maxHamming)")
-    require(bits % chunks == 0, s"$bits bits must split evenly into $chunks chunks")
-    val chunkBits = bits / chunks
-    val mask = (1L << chunkBits) - 1
-    val chunkStructs = (0 until chunks).map(i => struct(
-      lit(i).as("ci"),
-      shiftright(col(hashCol), i * chunkBits).bitwiseAND(lit(mask)).as("cv")))
-    val chunked = hashed
-      .select(col(idCol).as("doc"), col(hashCol).as("_h"),
-        explode(array(chunkStructs: _*)).as("ch"))
-      .select(col("doc"), col("_h"), col("ch.ci").as("ci"), col("ch.cv").as("cv"))
-    // Chunk buckets are the simhash analog of LSH band buckets, and on
-    // a corpus with heavily correlated content (the r13 sf1 sweep
-    // measured 18x growth at 10x data through dedup_coverage's loose
-    // parameters) a hot (chunk, value) bucket goes quadratic exactly
-    // like a hot band. `hotBucketCap` applies the hotBandCap contract:
-    // oversize buckets contribute STAR candidates around the bucket-min
-    // representative — O(n) per hot bucket, every member still
-    // Hamming-verified against the representative, so detection
-    // membership survives while the full intra-bucket pair list is
-    // traded away. Default unbounded = the exact classical semantics
-    // the oracles replay.
-    val cands =
-      if (hotBucketCap == Int.MaxValue) {
-        chunked
-          .select(col("ci"), col("cv"), col("doc").as("doc_a"),
-            col("_h").as("sim_a"))
-          .join(chunked.select(col("ci"), col("cv"), col("doc").as("doc_b"),
-            col("_h").as("sim_b")), Seq("ci", "cv"))
-          .filter(col("doc_a") < col("doc_b"))
-          .select("doc_a", "doc_b", "sim_a", "sim_b").distinct()
-      } else {
-        // pin the chunk table: it feeds the stats agg, the size join,
-        // and both pair arms — unpinned, the hash pipeline upstream
-        // (simhash shingling / image decode) recomputes per consumer
-        val pinned = chunked.localCheckpoint(true)
-        val stats = pinned.groupBy("ci", "cv")
-          .agg(count(lit(1)).as("_bn"), min("doc").as("_rep"),
-            expr("min_by(_h, doc)").as("_repH"))
-        val sized = pinned.join(stats, Seq("ci", "cv"))
-        val cold = sized.filter(col("_bn") <= hotBucketCap)
-        val coldPairs = cold
-          .select(col("ci"), col("cv"), col("doc").as("doc_a"),
-            col("_h").as("sim_a"))
-          .join(cold.select(col("ci"), col("cv"), col("doc").as("doc_b"),
-            col("_h").as("sim_b")), Seq("ci", "cv"))
-          .filter(col("doc_a") < col("doc_b"))
-          .select("doc_a", "doc_b", "sim_a", "sim_b")
-        // star: rep = bucket min, so (rep, doc) is already canonical
-        val hotPairs = sized
-          .filter(col("_bn") > hotBucketCap && col("doc") =!= col("_rep"))
-          .select(col("_rep").as("doc_a"), col("doc").as("doc_b"),
-            col("_repH").as("sim_a"), col("_h").as("sim_b"))
-        coldPairs.unionByName(hotPairs).distinct()
-      }
-    cands
-      .withColumn("hamming", hamming(col("sim_a"), col("sim_b")))
-      .filter(col("hamming") <= maxHamming)
-      .select("doc_a", "doc_b", "hamming")
+    verifyHamming(
+      bucketPairs(pigeonholeRows(hashed, idCol, hashCol, chunks, bits, 1),
+        PigeonholeKey, carry = Seq("sim"), hotCap = hotBucketCap),
+      maxHamming)
   }
 
   /** Probe-vs-index form of [[hammingNearDupPairs]] for incremental
@@ -530,28 +532,19 @@ object TextOps {
     * least one probe member (probe↔corpus and probe↔probe when the
     * corpus contains the probe docs), normalized to doc_a < doc_b —
     * byte-identical to the full self-join's pairs restricted to that
-    * subset (pinned in LlmOpsSpec).
+    * subset (pinned in LlmOpsSpec and LlmProps).
     */
   def hammingNearDupProbe(corpusHashed: DataFrame, probeHashed: DataFrame,
       idCol: String, hashCol: String, maxHamming: Int, chunks: Int,
       bits: Int): DataFrame = {
     require(chunks > maxHamming,
       s"pigeonhole needs chunks ($chunks) > maxHamming ($maxHamming)")
-    require(bits % chunks == 0, s"$bits bits must split evenly into $chunks chunks")
-    val chunkBits = bits / chunks
-    val mask = (1L << chunkBits) - 1
-    def chunked(df: DataFrame) = {
-      val cs = (0 until chunks).map(i => struct(
-        lit(i).as("ci"),
-        shiftright(col(hashCol), i * chunkBits).bitwiseAND(lit(mask)).as("cv")))
-      df.select(col(idCol).as("doc"), col(hashCol).as("_h"),
-          explode(array(cs: _*)).as("ch"))
-        .select(col("doc"), col("_h"), col("ch.ci").as("ci"), col("ch.cv").as("cv"))
-    }
-    chunked(probeHashed)
-      .select(col("ci"), col("cv"), col("doc").as("pa"), col("_h").as("ha"))
-      .join(chunked(corpusHashed).select(col("ci"), col("cv"),
-        col("doc").as("pb"), col("_h").as("hb")), Seq("ci", "cv"))
+    def chunked(df: DataFrame) =
+      pigeonholeRows(df, idCol, hashCol, chunks, bits, 1)
+    val cands = chunked(probeHashed)
+      .select(col("ki"), col("kv"), col("doc").as("pa"), col("sim").as("ha"))
+      .join(chunked(corpusHashed).select(col("ki"), col("kv"),
+        col("doc").as("pb"), col("sim").as("hb")), PigeonholeKey)
       .filter(col("pa") =!= col("pb"))
       // normalize orientation so probe↔probe pairs (seen from both
       // sides) collapse in the distinct
@@ -561,9 +554,7 @@ object TextOps {
         when(col("pa") < col("pb"), col("ha")).otherwise(col("hb")).as("sim_a"),
         when(col("pa") < col("pb"), col("hb")).otherwise(col("ha")).as("sim_b"))
       .distinct()
-      .withColumn("hamming", hamming(col("sim_a"), col("sim_b")))
-      .filter(col("hamming") <= maxHamming)
-      .select("doc_a", "doc_b", "hamming")
+    verifyHamming(cands, maxHamming)
   }
 
   /** [[simHashNearDup]]'s probe-vs-index form: SimHash both sides, then
@@ -576,68 +567,54 @@ object TextOps {
       simHash(probe, idCol, textCol), idCol, "simhash", maxHamming, chunks, bits)
 
   /** COMBINATORIAL pigeonhole blocking (Manku et al., WWW'07 §3) — the
-    * form of [[hammingNearDupPairs]] that survives web-scale corpora.
+    * form of [[hammingNearDupPairs]] whose candidates stay linear.
     *
     * The single-chunk scheme keys buckets on ONE chunk value
     * (`bits/chunks` bits). Its candidate set is sub-quadratic only while
     * n ≪ 2^(bits/chunks): at 60 bits / 4 chunks the keys are 15 bits, so
     * by ~10⁵ documents random hashes collide constantly and candidates
-    * grow as n²/2^15 — quadratic, just with a small constant
-    * (`ScaleBench neardup_scale` records the cliff empirically). This variant
-    * keys buckets on every (chunks − maxHamming)-sized SUBSET of chunks:
-    * a pair within Hamming distance k ≤ maxHamming has its differing
-    * bits inside at most k chunks, so some (chunks − k) chunks agree
-    * exactly and the pair shares that subset's bucket — still lossless
-    * by pigeonhole. The bucket key widens from bits/chunks to
+    * grow as n²/2^15 — quadratic, just with a small constant. This
+    * variant keys buckets on every (chunks − maxHamming)-sized SUBSET of
+    * chunks: a pair within Hamming distance k ≤ maxHamming has its
+    * differing bits inside at most k chunks, so some (chunks − k) chunks
+    * agree exactly and the pair shares that subset's bucket — still
+    * lossless by pigeonhole. The bucket key widens from bits/chunks to
     * (chunks − maxHamming) · bits/chunks bits (e.g. 30 bits for 60/6/3),
     * crushing random collisions back to n²/2^30-scale — negligible until
     * billions of documents — at the cost of C(chunks, maxHamming) bucket
-    * tables instead of `chunks` (20× fan-out for 6/3 vs 4×). Fan-out is
-    * linear in n and a constant of the config; candidates are what
-    * explode — at scale the trade is strictly right, and output is
+    * rows per document instead of `chunks` (20 for 6/3 vs 4). Output is
     * IDENTICAL to the single-chunk scheme by construction (both verify
     * exact Hamming over lossless candidate sets).
     *
-    * Subset keys pack the selected chunk values into one LONG
-    * (positional shifts — (chunks − maxHamming) · bits/chunks ≤ bits ≤
-    * 62 by the requires), so the join key stays fixed-width integer,
-    * never a string concat.
+    * What `ScaleBench neardup_scale` measured (uniform 60-bit hashes plus
+    * planted clusters, 1M and 4M docs, two recordings): single-chunk
+    * candidates grow ×15.8 per 4× docs (61.9M → 980M), blocked ×4.07
+    * (1.61M → 6.55M) — but single-chunk still ran FASTER at both sizes
+    * (2.67 vs 5.25 s and 3.86 vs 33.55 s in one recording, 7.99 vs
+    * 34.74 s and 29.91 vs 149.38 s in another), and its time grew only
+    * ×1.4–3.7 per 4× docs: its random candidates are cheap long pairs,
+    * while the blocked form builds and shuffles 5× the key rows. The
+    * candidate argument wins only once single-chunk's n²/2^14 random
+    * pairs dominate its time, which had not happened by 4M docs (980M
+    * candidates against the blocked form's 80M key rows); the next 4×
+    * of data would put single-chunk at ~15.7B candidates. Below that
+    * point the single-chunk form is the faster one.
     */
   def hammingNearDupPairsBlocked(hashed: DataFrame, idCol: String,
       hashCol: String, maxHamming: Int, chunks: Int, bits: Int): DataFrame = {
     require(chunks > maxHamming,
       s"pigeonhole needs chunks ($chunks) > maxHamming ($maxHamming)")
-    require(bits % chunks == 0, s"$bits bits must split evenly into $chunks chunks")
     require(bits <= 62, s"packed subset keys need bits ($bits) <= 62")
-    val chunkBits = bits / chunks
-    val mask = (1L << chunkBits) - 1
-    val subsetSize = chunks - maxHamming
-    val subsets = (0 until chunks).combinations(subsetSize).toSeq
-    val keyStructs = subsets.zipWithIndex.map { case (ss, si) =>
-      val packed = ss.zipWithIndex.map { case (c, pos) =>
-        shiftleft(shiftright(col(hashCol), c * chunkBits).bitwiseAND(lit(mask)),
-          pos * chunkBits)
-      }.reduce(_ + _)
-      struct(lit(si).as("ki"), packed.as("kv"))
-    }
-    val keyed = hashed
-      .select(col(idCol).as("doc"), col(hashCol).as("_h"),
-        explode(array(keyStructs: _*)).as("k"))
-      .select(col("doc"), col("_h"), col("k.ki").as("ki"), col("k.kv").as("kv"))
-    keyed
-      .select(col("ki"), col("kv"), col("doc").as("doc_a"), col("_h").as("sim_a"))
-      .join(keyed.select(col("ki"), col("kv"), col("doc").as("doc_b"),
-        col("_h").as("sim_b")), Seq("ki", "kv"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b", "sim_a", "sim_b").distinct()
-      .withColumn("hamming", hamming(col("sim_a"), col("sim_b")))
-      .filter(col("hamming") <= maxHamming)
-      .select("doc_a", "doc_b", "hamming")
+    verifyHamming(
+      bucketPairs(pigeonholeRows(hashed, idCol, hashCol, chunks, bits,
+        chunks - maxHamming), PigeonholeKey, carry = Seq("sim")),
+      maxHamming)
   }
 
-  /** [[simHashNearDup]] through the combinatorial blocking — the
-    * configuration to use beyond ~10⁵ documents (see
-    * [[hammingNearDupPairsBlocked]]).
+  /** [[simHashNearDup]] through the combinatorial blocking: the same
+    * pairs with linear candidate growth, but slower than the single-chunk
+    * form up to at least 4M documents (see [[hammingNearDupPairsBlocked]]
+    * for the measurements).
     */
   def simHashNearDupBlocked(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, chunks: Int = 6, bits: Int = 60): DataFrame =
@@ -899,37 +876,32 @@ object TextOps {
       .groupBy("doc").agg(collect_set("s").as("ss"))
   }
 
-  /** Ordered-set state for [[setSimJoin]] from a (doc, ss) set table:
-    * (doc, ss, c, pref) where tokens are replaced by their INTEGER rank
-    * under the global rare-first total order (ascending document
-    * frequency, ties by token — the order the prefix filter requires),
-    * `ss` is the doc's sorted rank array and `pref` its prefix-filter
-    * slice. The dictionary is the VernicaJoin (VLDB'10) design: exact
-    * distributed rank assignment via sort + zipWithIndex over the
-    * |vocab|-row frequency table — ids are unique BY CONSTRUCTION (no
-    * hash-collision caveat), ascending id order IS the (freq, token)
-    * order, and every downstream step gets cheaper: the candidate join
-    * keys on longs instead of shingle strings, the per-doc state is a
-    * primitive long array (~4× smaller than the string arrays it
-    * replaces — r15's c32 GC storms were those arrays), and the verify's
-    * array_intersect takes Spark's primitive codegen path (measured
-    * 6.6 s → 3.0 s on the verify stage alone at sf0.1/c8).
-    * Frequencies are counted from the set table itself (each (doc, s)
-    * pair appears exactly once), so ranks — and therefore candidates,
-    * intersection counts, and the final output — are identical to
-    * deriving them from a distinct explode of the raw corpus.
-    * zipWithIndex over a totally-ordered sort is deterministic (the id
-    * is the row's global rank, independent of partition boundaries), so
-    * an un-materialized recompute cannot diverge.
+  /** The rare-first rank dictionary applied to a (doc, ss) set table:
+    * (doc, ss, c) where tokens are replaced by their INTEGER rank under
+    * the global rare-first total order (ascending document frequency,
+    * ties by token — the order the prefix filter requires), `ss` is the
+    * doc's sorted rank array and `c` its size. The dictionary is the
+    * VernicaJoin (VLDB'10) design: exact distributed rank assignment via
+    * sort + zipWithIndex over the |vocab|-row frequency table — ids are
+    * unique BY CONSTRUCTION (no hash-collision caveat), ascending id
+    * order IS the (freq, token) order, and every downstream step gets
+    * cheaper: the candidate join keys on longs instead of shingle
+    * strings, the per-doc state is a primitive long array (~4× smaller
+    * than the string arrays it replaces — r15's c32 GC storms were those
+    * arrays), and the verify's array_intersect takes Spark's primitive
+    * codegen path (measured 6.6 s → 3.0 s on the verify stage alone at
+    * sf0.1/c8). Frequencies are counted from the set table itself (each
+    * (doc, s) pair appears exactly once), so ranks — and therefore
+    * candidates, intersection counts, and the final output — are
+    * identical to deriving them from a distinct explode of the raw
+    * corpus. zipWithIndex over a totally-ordered sort is deterministic
+    * (the id is the row's global rank, independent of partition
+    * boundaries), so an un-materialized recompute cannot diverge.
     */
-  private[graft] def setSimPerDocFromSets(sets: DataFrame,
-      threshold: Double): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold ($threshold) must be in (0, 1]")
+  private def rankedSets(sets: DataFrame): DataFrame = {
     val expl = sets.select(col("doc"), explode(col("ss")).as("s"))
     val freq = expl.groupBy("s").agg(count(lit(1)).as("_f"))
-    val sess = sets.sparkSession
-    val dict = sess.createDataFrame(
+    val dict = sets.sparkSession.createDataFrame(
       freq.select(col("s"), col("_f")).sort("_f", "s").rdd
         .zipWithIndex.map { case (r, i) =>
           org.apache.spark.sql.Row(r.getString(0), i) },
@@ -942,6 +914,16 @@ object TextOps {
       .groupBy("doc")
       .agg(sort_array(collect_list(col("_id"))).as("ss"))
       .withColumn("c", size(col("ss")).cast("long"))
+  }
+
+  /** Ordered-set state for [[setSimJoin]]: the [[rankedSets]] state plus
+    * `pref`, the doc's prefix-filter slice for Jaccard ≥ `threshold`.
+    */
+  private[graft] def setSimPerDocFromSets(sets: DataFrame,
+      threshold: Double): DataFrame = {
+    require(threshold > 0.0 && threshold <= 1.0,
+      s"threshold ($threshold) must be in (0, 1]")
+    rankedSets(sets)
       .withColumn("_plen",
         (col("c") - ceil(col("c") * lit(threshold)) + 1).cast("int"))
       .withColumn("pref", expr("slice(ss, 1, _plen)"))
@@ -958,14 +940,9 @@ object TextOps {
       threshold)
 
   /** Distinct candidate pairs sharing at least one prefix token. */
-  private[graft] def setSimCandidates(perDoc: DataFrame): DataFrame = {
-    val pref = perDoc.select(col("doc"), explode(col("pref")).as("_tok"))
-    pref.select(col("_tok"), col("doc").as("doc_a"))
-      .join(pref.select(col("_tok"), col("doc").as("doc_b")), Seq("_tok"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-      .distinct()
-  }
+  private[graft] def setSimCandidates(perDoc: DataFrame): DataFrame =
+    bucketPairs(perDoc.select(col("doc"), explode(col("pref")).as("_tok")),
+      Seq("_tok"))
 
   /** LSH recall evaluation: every TRUE pair from the exact prefix-filter
     * join ([[setSimJoin]] semantics) annotated with whether the banded
@@ -991,7 +968,8 @@ object TextOps {
       minhashState(df, idCol, textCol, shingleN, numBands * rowsPerBand,
         repartitionInput))
     val lsh = verifyJaccard(
-        bandCandidates(bandRows(st, numBands, rowsPerBand)), st, st, threshold)
+        bucketPairs(bandRows(st, numBands, rowsPerBand), BandKey), st, st,
+        threshold)
       .select(col("doc_a"), col("doc_b"), lit(true).as("_hit"))
     val perDoc = materialize(
       setSimPerDocFromSets(st.select(col("doc"), col("ss")), threshold))
@@ -3221,23 +3199,8 @@ object TextOps {
     // per-doc state is a primitive array (the string arrays were the
     // GC feed behind the 2-5× rep variance), and array_intersect takes
     // the primitive codegen path.
-    val sets = setSimSets(df, idCol, textCol, shingleN, repartitionInput)
-    val expl = sets.select(col("doc"), explode(col("ss")).as("s"))
-    val freq = expl.groupBy("s").agg(count(lit(1)).as("_f"))
-    val sess = df.sparkSession
-    val dict = sess.createDataFrame(
-      freq.select(col("s"), col("_f")).sort("_f", "s").rdd
-        .zipWithIndex.map { case (r, i) =>
-          org.apache.spark.sql.Row(r.getString(0), i) },
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("s",
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("_id",
-          org.apache.spark.sql.types.LongType, nullable = false))))
-    val perDoc = expl.join(dict, "s")
-      .groupBy("doc")
-      .agg(sort_array(collect_list(col("_id"))).as("ss"))
-      .withColumn("c", size(col("ss")).cast("long"))
+    val perDoc = rankedSets(
+        setSimSets(df, idCol, textCol, shingleN, repartitionInput))
       // ⌈c·t⌉ in exact integers: (c·tµ + 10⁶ − 1) div 10⁶
       .withColumn("_plen",
         (col("c") - expr(s"(c * $thresholdMicro + 999999) div 1000000") + 1)
@@ -4273,11 +4236,7 @@ object TextOps {
             expr(s"transform(slice(sig, ${b * bandRows + 1}, $bandRows), " +
               "x -> cast(x as string))")))
         }: _*)).as(Seq("band", "key")))
-    val cand = bands.select(col("doc").as("doc_a"), col("band"), col("key"))
-      .join(bands.select(col("doc").as("doc_b"), col("band"), col("key")),
-        Seq("band", "key"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
+    val cand = bucketPairs(bands, Seq("band", "key"))
     val est = cand
       .join(sig.select(col("doc").as("doc_a"), col("sig").as("_sa")), "doc_a")
       .join(sig.select(col("doc").as("doc_b"), col("sig").as("_sb")), "doc_b")

@@ -66,7 +66,9 @@ object Betweenness {
       symEdges.select(col(aCol).as("a"), col(bCol).as("b")))
     if (LocalFinish.fits("Betweenness.approx", localFinishCap,
         LocalFinish.longIds(sym, "a") && LocalFinish.longIds(sources, "n"),
-        symmetric = true)(LocalFinish.rows(sym, "a", "b")))
+        symmetric = true)(LocalFinish.rows(sym, "a", "b")) &&
+      LocalFinish.fits("Betweenness.approx sources", localFinishCap)(
+        LocalFinish.rows(sources, "n")))
       return localApprox(sym, sources, levels, topK)
     var vis = materialize(sources.select(col("n").as("src"), col("n"),
       lit(0).as("d"), lit(1L).as("sigma")))

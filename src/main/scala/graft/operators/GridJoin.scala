@@ -69,7 +69,7 @@ object GridJoin {
   /** Candidate pairs PRE distance filter, each unordered pair exactly
     * once, as (id, x, y, id_b, xb, yb) — id/id_b NOT yet canonically
     * ordered in the capped branches. Package-visible so `ScaleBench grid_skew`
-    * can measure the candidate bound directly (the bandCandidates
+    * can measure the candidate bound directly (the `TextOps.bucketPairs`
     * pattern). */
   private[graft] def candidatePairs(df: DataFrame, idCol: String,
       xCol: String, yCol: String, maxDist: Long, shift: Long,

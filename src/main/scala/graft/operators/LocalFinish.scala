@@ -26,7 +26,10 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   *    wrap negative and silently turn the local regime off.
   *  - a gate that compares several relations calls [[fits]] once per
   *    relation (short-circuiting), and the local regime runs only when
-  *    every call says so.
+  *    every call says so. The seed relations of Sssp, Betweenness and
+  *    NeighborhoodFunction, which their replays load beside the edges,
+  *    are counted against the same cap by a second call, so their
+  *    count runs only once the edges have fit.
   *  - the one-task idiom is the typed `Dataset.coalesce(1).mapPartitions`.
   *    Not `repartition(1)`: replay inputs are checkpointed leaves or
   *    projections of them, so coalescing concatenates their partitions
@@ -43,8 +46,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   *    the counting aggregate, so it adds no Spark job. GraphColoring,
   *    KTruss and Mst drop null-id edges before their gates (canonical
   *    `lo < hi` edges, triangle support ≥ 1), so they count plainly.
-  *    The seed relations of Sssp, Betweenness and NeighborhoodFunction
-  *    are not counted, so a null SEED id still fails the replay task.
+  *    The seed counts of Sssp, Betweenness and NeighborhoodFunction go
+  *    through [[rows]] as well, so a null seed id also takes the
+  *    distributed regime, and the answer does not depend on the cap.
   *
   * Every decision logs one INFO line on the `graft.localfinish` logger
   * (operator, rows counted or `null-ids`, the cap it compared against,

@@ -50,7 +50,9 @@ object NeighborhoodFunction {
     val counts: DataFrame =
       if (LocalFinish.fits("NeighborhoodFunction.sample", localFinishCap,
           LocalFinish.longIds(e, "_a") && LocalFinish.longIds(seeds, seedCol),
-          symmetric = true)(LocalFinish.rows(e, "_a", "_b")))
+          symmetric = true)(LocalFinish.rows(e, "_a", "_b")) &&
+        LocalFinish.fits("NeighborhoodFunction.sample seeds", localFinishCap)(
+          LocalFinish.rows(seeds, seedCol)))
         localCounts(e, seeds, seedCol, maxHops)
       else {
         var frontier = seeds.select(col(seedCol).as("src")).distinct()

@@ -58,7 +58,9 @@ object Sssp {
       .localCheckpoint(eager = true)
     if (LocalFinish.fits("Sssp.distances", localFinishCap,
         LocalFinish.longIds(sym, "a") && LocalFinish.longIds(seeds, "n"),
-        symmetric = true)(LocalFinish.rows(sym, "a", "b", "w"))) {
+        symmetric = true)(LocalFinish.rows(sym, "a", "b", "w")) &&
+      LocalFinish.fits("Sssp.distances seeds", localFinishCap)(
+        LocalFinish.rows(seeds, "n"))) {
       // pinned: the replay reads sym, whose blocks are freed next
       val out = localDistances(sym, seeds, rounds).localCheckpoint(eager = true)
       SuffixArray.freeCheckpoint(sym)
@@ -84,7 +86,7 @@ object Sssp {
     * relaxation rounds over the in-memory symmetric edge list — the
     * same round-limited (NOT fixpoint) semantics as the distributed
     * loop, so surplus-round behavior matches too. Long ids; the gate
-    * sends null edge ids or costs to the distributed rounds.
+    * sends null edge ids, costs or seed ids to the distributed rounds.
     */
   private def localDistances(sym: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {

@@ -64,7 +64,7 @@ object LlmProps extends Properties("LlmOps") {
   }
 
   property("combinatorial subset blocking equals single-chunk blocking AND brute force") =
-    forAll(hashCorpusGen) { hashes =>
+    forAll(hashCorpusGen, Gen.choose(0, (1 << 28) - 1)) { (hashes, probeMask) =>
       val df = hashes.toDF("doc_id", "simhash")
       def run(f: => org.apache.spark.sql.DataFrame): Set[(Long, Long, Int)] =
         f.select("doc_a", "doc_b", "hamming").as[(Long, Long, Int)].collect().toSet
@@ -72,11 +72,55 @@ object LlmProps extends Properties("LlmOps") {
         df, "doc_id", "simhash", maxHamming = 3, chunks = 6, bits = 60))
       val single = run(TextOps.hammingNearDupPairs(
         df, "doc_id", "simhash", maxHamming = 3, chunks = 4, bits = 60))
+      // the probe form over a random subset of the corpus (ids < 28)
+      def isProbe(id: Long) = ((probeMask >> id.toInt) & 1) == 1
+      val probe = run(TextOps.hammingNearDupProbe(df,
+        hashes.filter(h => isProbe(h._1)).toDF("doc_id", "simhash"),
+        "doc_id", "simhash", maxHamming = 3, chunks = 4, bits = 60))
       val brute = (for {
         (a, ha) <- hashes; (b, hb) <- hashes if a < b
         d = java.lang.Long.bitCount(ha ^ hb) if d <= 3
       } yield (a, b, d)).toSet
-      blocked == brute && single == brute
+      blocked == brute && single == brute &&
+        probe == brute.filter(p => isProbe(p._1) || isProbe(p._2))
+    }
+
+  /** Distinct (k1, k2, doc) rows: a two-column bucket key and up to 24
+    * docs, so buckets range from empty to a dozen members. */
+  private val keyedGen: Gen[Seq[(Int, Int, Long)]] = for {
+    n <- Gen.choose(4, 48)
+    rows <- Gen.listOfN(n, for {
+      k1 <- Gen.choose(0, 2); k2 <- Gen.choose(0, 1)
+      doc <- Gen.choose(0L, 23L)
+    } yield (k1, k2, doc))
+  } yield rows.distinct
+
+  property("bucketPairs: all pairs under a cap >= every bucket, else cold pairs plus the min-doc star") =
+    forAll(keyedGen, Gen.choose(0, 3), Gen.choose(1, 100)) { (rows, slack, pick) =>
+      // the carried column is a function of the doc, as in every caller
+      def v(doc: Long) = doc * 7 + 3
+      val keyed = rows.map { case (k1, k2, d) => (k1, k2, d, v(d)) }
+        .toDF("k1", "k2", "doc", "v")
+      def run(cap: Int) = TextOps.bucketPairs(keyed, Seq("k1", "k2"),
+          carry = Seq("v"), hotCap = cap)
+        .select("doc_a", "doc_b", "v_a", "v_b")
+        .as[(Long, Long, Long, Long)].collect().toSet
+      val buckets = rows.groupBy(r => (r._1, r._2)).values
+        .map(_.map(_._3)).toSeq
+      def withV(ps: Iterable[(Long, Long)]) =
+        ps.map { case (a, b) => (a, b, v(a), v(b)) }.toSet
+      def all(docs: Seq[Long]) =
+        for (a <- docs; b <- docs if a < b) yield (a, b)
+      val brute = withV(buckets.flatMap(all))
+      val largest = buckets.map(_.size).max
+      // a cap below the largest bucket: every hot-bucket member pairs
+      // with its bucket's min doc, every cold-bucket pair is kept
+      val cap = if (largest > 1) 1 + pick % (largest - 1) else 1
+      val cold = buckets.filter(_.size <= cap).flatMap(all)
+      val star = buckets.filter(_.size > cap)
+        .flatMap(b => b.filter(_ != b.min).map(d => (b.min, d)))
+      run(Int.MaxValue) == brute && run(largest + slack) == brute &&
+        run(cap) == withV(cold ++ star)
     }
 
   property("setSimJoin equals brute-force exact Jaccard on random corpora") =

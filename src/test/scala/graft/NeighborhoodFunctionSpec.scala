@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.NeighborhoodFunction
+import graft.operators.{LocalFinish, NeighborhoodFunction}
 
 /** X307 sampled neighborhood function: hand-traced BFS profile over a
   * path + triangle + isolated seed, the 90%-reach flag marking the
@@ -54,5 +54,20 @@ class NeighborhoodFunctionSpec extends SparkSpec {
         maxHops = hops, localFinishCap = 0L).collect().toSeq
       assert(loc === dist, s"hops=$hops")
     }
+  }
+
+  test("a null seed id takes the distributed regime under every cap") {
+    // the rounds count the null seed as one source at hop 0 and expand
+    // nothing from it; the one-task replay cannot decode it
+    val sym = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L)).toDF("a", "b")
+    val seeds = Seq(Some(1L), None).toDF("n")
+    def run(cap: Long) = NeighborhoodFunction.sample(sym, "a", "b", seeds,
+        "n", maxHops = 2, localFinishCap = cap)
+      .as[(Int, Long, Long, Boolean)].collect().toSeq
+    val viaDist = run(0L)
+    assert(viaDist === Seq((0, 2L, 2L, false), (1, 3L, 1L, false),
+      (2, 4L, 1L, true)))
+    assert(run(LocalFinish.GraphEdges) === viaDist)
+    assert(run(Long.MaxValue) === viaDist)
   }
 }

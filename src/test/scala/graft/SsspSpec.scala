@@ -73,4 +73,18 @@ class SsspSpec extends SparkSpec {
     assert(run(LocalFinish.GraphEdges) === viaDist)
     assert(run(Long.MaxValue) === viaDist)
   }
+
+  test("a null seed id takes the distributed regime under every cap") {
+    // the rounds keep the null seed at distance 0 and relax nothing from
+    // it; the one-task replay cannot decode it
+    val edges = Seq((1L, 2L, 1L), (2L, 3L, 1L)).toDF("a", "b", "cost")
+    def run(cap: Long) = Sssp.distances(edges, "a", "b", "cost",
+        Seq(Some(1L), None).toDF("n"), rounds = 3, localFinishCap = cap)
+      .collect().map(x => (Option(x.get(0)), x.getLong(1))).toSet
+    val viaDist = run(0L)
+    assert(viaDist ===
+      Set((Some(1L), 0L), (Some(2L), 1L), (Some(3L), 2L), (None, 0L)))
+    assert(run(LocalFinish.GraphEdges) === viaDist)
+    assert(run(Long.MaxValue) === viaDist)
+  }
 }
